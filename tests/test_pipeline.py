@@ -129,3 +129,92 @@ def test_pipeline_deterministic_under_repartition(spark, corpus):
     c1 = {r["file_id"]: r["cluster_id"] for r in run_dedup(files1, CFG).clusters.collect()}
     c2 = {r["file_id"]: r["cluster_id"] for r in run_dedup(files2, CFG).clusters.collect()}
     assert c1 == c2
+
+
+def test_exact_copies_without_pair_edges(spark):
+    """Exact-copy edges but no verified pair edge: the driver-side cluster
+    assembly must not index the empty pair-label array."""
+    text = "def f(x):\n    return x + 1\n" * 20
+    other = "class Unrelated:\n    value = 'nothing in common'\n" * 20
+    files = spark.createDataFrame(
+        [
+            ("r1", "a.py", "c1", "python", text),
+            ("r2", "a.py", "c1", "python", text),
+            ("r3", "b.py", "c1", "python", other),
+        ],
+        "repo string, path string, commit string, lang string,"
+        " content string",
+    )
+    res = run_dedup(files, CFG)
+    repo_of = {
+        r["file_id"]: r["repo"]
+        for r in res.ingested.select("file_id", "repo").collect()
+    }
+    cluster_of = {
+        repo_of[r["file_id"]]: r["cluster_id"] for r in res.clusters.collect()
+    }
+    assert res.clusters.count() == 3
+    assert cluster_of["r1"] == cluster_of["r2"] != cluster_of["r3"]
+
+
+def _canon(df):
+    cols = sorted(df.columns)
+    return sorted(
+        [tuple(r[c] for c in cols) for r in df.select(*cols).collect()],
+        key=repr,
+    )
+
+
+def test_pair_kernels_run_on_shuffle_partitions(spark, result):
+    """A 1-partition candidate relation reaches both Python pair kernels
+    as spark.sql.shuffle.partitions partitions, and their output rows do
+    not depend on that count."""
+    from twinspect_spark.operators.verify import (
+        estimate_filter_candidates,
+        verify_pairs,
+    )
+
+    cands = result.candidates.select("a", "b").coalesce(1)
+    assert cands.count() > 10
+    conf = spark.conf
+    base_parts = conf.get("spark.sql.shuffle.partitions")
+    outs = []
+    try:
+        for n in (1, 4, 7):
+            conf.set("spark.sql.shuffle.partitions", str(n))
+            est = estimate_filter_candidates(cands, result.signatures, CFG)
+            ver = verify_pairs(cands, result.ingested, CFG)
+            # a map kernel's output keeps its input's partitions
+            assert est.rdd.getNumPartitions() == n
+            assert ver.rdd.getNumPartitions() == n
+            outs.append((_canon(est), _canon(ver)))
+    finally:
+        conf.set("spark.sql.shuffle.partitions", base_parts)
+    assert outs[0][0] and outs[0][1]
+    assert outs[0] == outs[1] == outs[2]
+
+
+@pytest.mark.parametrize("max_driver_edges", [None, 0])
+@pytest.mark.parametrize("with_pairs", [True, False])
+def test_cluster_stage_paths(spark, max_driver_edges, with_pairs):
+    """cluster_with_members on the driver path and the forced distributed
+    path, with and without verified pair edges."""
+    from twinspect_spark.operators.cc import cluster_with_members
+
+    pairs = [(1, 2), (2, 3), (10, 11)] if with_pairs else []
+    clusters, _ = cluster_with_members(
+        spark.createDataFrame(pairs, "a long, b long"),
+        vertices=spark.createDataFrame(
+            [(v,) for v in (1, 2, 3, 10, 11, 50, 60)], "file_id long"
+        ),
+        exact_edges=spark.createDataFrame(
+            [(1, 100), (50, 51)], "a long, b long"
+        ),
+        max_driver_edges=max_driver_edges,
+    )
+    got = {r["file_id"]: r["cluster_id"] for r in clusters.collect()}
+    want = {v: v for v in (1, 2, 3, 10, 11, 50, 60)}
+    want.update({100: 1, 51: 50})
+    if with_pairs:
+        want.update({2: 1, 3: 1, 11: 10})
+    assert got == want

@@ -122,3 +122,22 @@ def test_signatures_checkpoint_is_bucketed(spark, corpus, tmp_path_factory):
     # byte-identical content vs a plain parquet read of the same files
     plain = spark.read.parquet(man.stage_path("signatures"))
     assert sigs.count() == plain.count()
+
+
+def test_durable_path_matches_run_dedup(spark, corpus, tmp_path_factory):
+    """run_dedup_resumable runs the same candidate plan as run_dedup:
+    identical candidates and clusters."""
+    from twinspect_spark.pipeline import run_dedup
+
+    def canon(df):
+        cols = sorted(df.columns)
+        return sorted(
+            tuple(r[c] for c in cols) for r in df.select(*cols).collect()
+        )
+
+    root = str(tmp_path_factory.mktemp("ckpt_same"))
+    files = spark.createDataFrame(corpus.files)
+    durable, _, _ = run_dedup_resumable(spark, files, CFG, root)
+    batch = run_dedup(files, CFG)
+    assert canon(durable.candidates) == canon(batch.candidates)
+    assert _clusters_map(durable) == _clusters_map(batch)

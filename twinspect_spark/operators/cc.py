@@ -81,6 +81,7 @@ def connected_components(
     max_iter: int = 30,
     max_driver_edges: int | None = None,
     on_round=None,
+    n_edges: int | None = None,
 ) -> DataFrame:
     """edges(a, b) [+ vertices(file_id)] → clusters(file_id, cluster_id).
 
@@ -97,7 +98,8 @@ def connected_components(
     the distributed loop — used by the oracle gate to exercise it).
     ``on_round(it)`` is invoked after each distributed hash-min round
     materializes — the rounds-to-convergence instrumentation for the
-    scale-evidence bench (bench.py --ccbench).
+    scale-evidence bench (bench.py --ccbench). ``n_edges`` is the
+    caller's count of ``edges``, when it has one, to skip the size probe.
     """
     threshold = (
         DRIVER_CC_MAX_EDGES if max_driver_edges is None else max_driver_edges
@@ -109,7 +111,8 @@ def connected_components(
     # three small driver-blocking jobs over 2× the rows, a fixed tax
     # the scaling composite's near-flat cluster stage paid at every
     # level (round-4 floors)
-    n_edges = edges.count()
+    if n_edges is None:
+        n_edges = edges.count()
     if n_edges <= threshold:
         # Arrow toPandas, not collect(): per-Row materialization costs
         # ~30s/M rows; the Arrow path moves the same edges in ~1s;
@@ -261,7 +264,10 @@ def cluster_with_members(
                 if len(ids)
                 else np.zeros(len(ea), dtype=bool)
             )
-            mlab = np.where(found, labels[pos_c], ea)
+            # index only under the mask: with no pair edges ``labels`` is
+            # empty and even the clipped position is out of bounds
+            mlab = ea.copy()
+            mlab[found] = labels[pos_c[found]]
             pdf = pd.DataFrame(
                 {
                     "file_id": np.concatenate([ids, singles, eb]),
@@ -275,7 +281,8 @@ def cluster_with_members(
                 True,
             )
     rep_clusters = connected_components(
-        pair_edges, vertices=vertices, max_driver_edges=max_driver_edges
+        pair_edges, vertices=vertices, max_driver_edges=max_driver_edges,
+        n_edges=n_pairs,
     )
     members = exact_edges.alias("e").join(
         rep_clusters.alias("r"), F.col("e.a") == F.col("r.file_id")

@@ -15,6 +15,17 @@ UDF cost model (SURVEY.md §4):
 
 Stages 3-4 see only candidate pairs (tiny vs n²); content is joined in at
 the last moment so it never rides through the band shuffles.
+
+Partitioning rule for the two Python pair kernels (stage 2's mapInArrow,
+stages 3-4's mapInPandas): their pair input is hash-repartitioned by ``b``
+into ``spark.sql.shuffle.partitions`` partitions (``_spread_by_b``) before
+the signature / content joins, which are broadcasts at ordinary sizes and
+so keep whatever partitioning the pairs arrive with. Without it AQE
+coalesces the ~30 B/row pair relation by bytes into one partition, and
+the CPU-heavy kernel runs as one task while the other slots idle. An
+explicit partition count is never coalesced by AQE; only pair rows are
+shuffled, never content; and pairs sharing a ``b`` doc share a partition,
+which the verify kernel's per-partition shingle cache relies on.
 """
 
 from __future__ import annotations
@@ -139,6 +150,14 @@ def _est_filter_arrow(keep_cols: list[str], threshold: float, num_perm: int):
     return batches
 
 
+def _spread_by_b(pairs: DataFrame) -> DataFrame:
+    """Hash-repartition pair rows by ``b`` into
+    ``spark.sql.shuffle.partitions`` partitions, so a Python pair kernel
+    downstream runs on every task slot (see the module docstring)."""
+    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pairs.repartition(n, "b")
+
+
 def estimate_filter_candidates(
     candidates: DataFrame, signatures: DataFrame, cfg: DedupConfig,
     margin: float = 0.15, pre_gated: bool = False,
@@ -196,7 +215,7 @@ def estimate_filter_candidates(
     # reject every pair. Degrade to a full-signature check instead.
     # ``pre_gated``: the caller already ran the packed in-join prefix
     # gate (unified_candidates) — skip the redundant HOF pass here.
-    joined = candidates.join(sa, "a").join(sb, "b")
+    joined = _spread_by_b(candidates).join(sa, "a").join(sb, "b")
     if not pre_gated:
         p = min(_PREFIX_LANES, cfg.num_perm)
         prefix_frac = (
@@ -247,13 +266,12 @@ def _verify_map(keep_cols: list[str], cfg: DedupConfig, with_lcs: bool):
     # Per-partition doc_id→shingle-hash cache. A doc surviving into P
     # candidate pairs used to be re-shingled P times (shingling is the
     # kernel's dominant cost: O(len·k) numpy passes per doc); keyed by
-    # the already-present a/b ids it shingles once per partition. The
-    # content join's final shuffle hash-partitions pairs by ``b``, so
-    # every pair sharing a b-side doc is co-located by construction and
-    # repeated a-side docs of a clique land together too. The element
-    # cap bounds executor-thread memory (~32 MB of u64 at 4M elements);
-    # on overflow the cache resets rather than evicts — a coarse epoch
-    # reset keeps the hit rate with zero bookkeeping.
+    # the already-present a/b ids it shingles once per partition.
+    # verify_pairs hash-partitions the pairs by ``b`` (_spread_by_b), so
+    # every pair sharing a b-side doc is co-located by construction. The
+    # element cap bounds executor-thread memory (~32 MB of u64 at 4M
+    # elements); on overflow the cache resets rather than evicts — a
+    # coarse epoch reset keeps the hit rate with zero bookkeeping.
     # TWINSPECT_VERIFY_NO_CACHE=1 disables it (the bench.py
     # --verifybench A/B control; no semantic difference either way).
     _CACHE_MAX_ELEMS = 4_000_000
@@ -439,7 +457,7 @@ def verify_pairs(
         F.col("content").alias("content_b"),
         F.col("size").alias("size_b"),
     )
-    paired = candidates.join(ca, "a").join(cb, "b")
+    paired = _spread_by_b(candidates).join(ca, "a").join(cb, "b")
 
     # F4: cheap length-variation bound before any UDF
     max_len = F.greatest("size_a", "size_b")

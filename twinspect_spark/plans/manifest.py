@@ -280,7 +280,9 @@ def run_dedup_resumable(
 
     def _cands():
         deduped = unified_candidates(signatures, cfg)
-        return estimate_filter_candidates(deduped, signatures, cfg)
+        return estimate_filter_candidates(
+            deduped, signatures, cfg, pre_gated=True
+        )
 
     candidates = stage("candidates", _cands)
     pairs = stage("pairs", lambda: verify_pairs(candidates, ingested, cfg))
