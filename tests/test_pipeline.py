@@ -8,6 +8,8 @@ from __future__ import annotations
 import hashlib
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.corpus import generate_corpus
@@ -194,27 +196,81 @@ def test_pair_kernels_run_on_shuffle_partitions(spark, result):
     assert outs[0] == outs[1] == outs[2]
 
 
+def _dfs_clusters(pairs, vertices, members):
+    """Plain-Python reference: DFS from every node in id order, so each
+    component is labelled by its min id; a member takes its rep's label,
+    or the rep's own id when no edge touches the rep."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    label = {}
+    for start in sorted(set(adj) | set(vertices)):
+        if start in label:
+            continue
+        label[start] = start
+        stack = [start]
+        while stack:
+            for v in adj.get(stack.pop(), ()):
+                if v not in label:
+                    label[v] = start
+                    stack.append(v)
+    for rep, member in members:
+        label[member] = label.get(rep, rep)
+    return label
+
+
+@st.composite
+def _graphs(draw):
+    """(pairs, vertices, members) over ids 0-15 for edge endpoints,
+    0-20 for vertices (16-20 are never touched by an edge) and 0-25 for
+    member reps (21-25 are neither touched nor vertices). Member ids
+    start at 100, so they never collide with a node."""
+    pairs = draw(
+        st.lists(
+            st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(
+                lambda e: e[0] != e[1]
+            ),
+            max_size=20,
+        )
+    )
+    vertices = sorted(draw(st.sets(st.integers(0, 20))))
+    reps = draw(st.lists(st.integers(0, 25), max_size=5))
+    return pairs, vertices, [(r, 100 + i) for i, r in enumerate(reps)]
+
+
 @pytest.mark.parametrize("max_driver_edges", [None, 0])
 @pytest.mark.parametrize("with_pairs", [True, False])
-def test_cluster_stage_paths(spark, max_driver_edges, with_pairs):
-    """cluster_with_members on the driver path and the forced distributed
-    path, with and without verified pair edges."""
-    from twinspect_spark.operators.cc import cluster_with_members
+@given(graph=_graphs())
+@example(graph=([(1, 2), (2, 3), (10, 11)], [1, 2, 3, 10, 11, 50, 60],
+                [(1, 100), (50, 51)]))
+@example(graph=([], [], []))  # empty pair set, no vertices, no members
+@example(graph=([], [1, 2, 3], [(1, 100), (1, 101), (3, 102)]))  # exact-only
+@example(graph=([], list(range(10)), []))  # all singletons
+@example(graph=([(a, b) for a in range(6) for b in range(a + 1, 6)],
+                list(range(8)), [(5, 100)]))  # one clique
+# a 41-node path: the distributed loop needs 40 rounds, so a 30-round cap
+# would leave nodes 31-40 unconverged
+@example(graph=([(i, i + 1) for i in range(40)], [], [(40, 100)]))
+@settings(max_examples=3, deadline=None)
+def test_cluster_stage_paths(spark, max_driver_edges, with_pairs, graph):
+    """connected_components on the driver path and the forced
+    distributed path (``max_driver_edges=0``) equals a DFS min-id
+    reference. ``with_pairs=False`` drops the pair edges, so every graph
+    is also checked in its exact-copies-only shape."""
+    from twinspect_spark.operators.cc import connected_components
 
-    pairs = [(1, 2), (2, 3), (10, 11)] if with_pairs else []
-    clusters, _ = cluster_with_members(
+    pairs, vertices, members = graph
+    pairs = pairs if with_pairs else []
+    clusters = connected_components(
         spark.createDataFrame(pairs, "a long, b long"),
         vertices=spark.createDataFrame(
-            [(v,) for v in (1, 2, 3, 10, 11, 50, 60)], "file_id long"
+            [(v,) for v in vertices], "file_id long"
         ),
-        exact_edges=spark.createDataFrame(
-            [(1, 100), (50, 51)], "a long, b long"
-        ),
+        members=spark.createDataFrame(members, "a long, b long"),
         max_driver_edges=max_driver_edges,
     )
-    got = {r["file_id"]: r["cluster_id"] for r in clusters.collect()}
-    want = {v: v for v in (1, 2, 3, 10, 11, 50, 60)}
-    want.update({100: 1, 51: 50})
-    if with_pairs:
-        want.update({2: 1, 3: 1, 11: 10})
-    assert got == want
+    rows = clusters.collect()
+    got = {r["file_id"]: r["cluster_id"] for r in rows}
+    assert len(got) == len(rows)
+    assert got == _dfs_clusters(pairs, vertices, members)

@@ -245,29 +245,3 @@ def test_incremental_candidates_plan_is_pruned_and_broadcast(
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("bucket_pt" in ln for ln in scan_lines), scan_lines
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
-
-
-def test_merge_components_incremental_equivalence(spark):
-    """Contraction-based merge equals from-scratch CC on the union."""
-    from twinspect_spark.operators.cc import connected_components, merge_components
-
-    e1 = spark.createDataFrame([(1, 2), (3, 4), (10, 11)], "a long, b long")
-    c1 = connected_components(e1)
-    e2 = spark.createDataFrame([(2, 3), (5, 6), (11, 12)], "a long, b long")
-    merged = merge_components(
-        c1, e2, new_vertices=spark.createDataFrame(
-            [(5,), (6,), (12,), (99,)], "file_id long"
-        )
-    )
-    want = connected_components(
-        e1.unionByName(e2),
-        vertices=spark.createDataFrame(
-            [(1,), (2,), (3,), (4,), (5,), (6,), (10,), (11,), (12,), (99,)],
-            "file_id long",
-        ),
-    )
-    got = {r["file_id"]: r["cluster_id"] for r in merged.collect()}
-    expected = {r["file_id"]: r["cluster_id"] for r in want.collect()}
-    assert got == expected
-    assert got[99] == 99  # untouched new vertex is a singleton
-    assert got[4] == 1  # 1-2-3-4 merged through contracted edge 2-3

@@ -8,7 +8,8 @@ Stage graph (each stage a checkpointable DataFrame, SURVEY.md §7):
       signatures ──LSH bands──► cand_lsh ─┐
       signatures ──SimHash chunks──► cand_sim ─┤──union+distinct──► candidates
       candidates ──verify (cheap→expensive)──► pairs
-      pairs(verified) ∪ exact_edges ──iterative CC──► clusters
+      pairs(verified) ──CC──► rep clusters; exact-dup members inherit
+        their rep's label ──► clusters
 
 The reference runs the analogous stages imperatively per benchmark
 (twinspect/__main__.py:42-63); here each stage is a declarative plan and
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.ingest import ingest_files
 from twinspect_spark.operators.buckets import unified_candidates
-from twinspect_spark.operators.cc import cluster_with_members
+from twinspect_spark.operators.cc import connected_components
 from twinspect_spark.operators.exact import collapse_exact_dups
 from twinspect_spark.operators.verify import (
     estimate_filter_candidates,
@@ -141,29 +142,23 @@ def run_dedup(
     pairs = cut(verify_pairs(candidates, ingested, cfg), "verify")
     t0 = time.perf_counter()
     # CC runs on the REPRESENTATIVE graph only (pair edges are rep-to-rep
-    # by construction); exact-dup members then inherit their rep's label
-    # through one join. Feeding the exact star edges into CC instead
-    # would re-derive already-known components through the iterative
-    # loop — measured as the dominant cluster-stage cost on dup-heavy
-    # corpora. Component minima are unchanged: each rep is the min of
-    # its exact group, so min-over-reps == min-over-all-members.
-    # vertices from the SIGNATURES checkpoint, not the lazy `reps`
-    # relation — reps re-derives the groupBy(sha256)+join subtree over
-    # the ingest checkpoint on every consumer; signatures holds exactly
-    # one row per representative and is already materialized
-    clusters, driver_built = cluster_with_members(
+    # by construction); exact-dup members inherit their rep's label (see
+    # connected_components). Vertices come from the SIGNATURES
+    # checkpoint, not the lazy `reps` relation — reps re-derives the
+    # groupBy(sha256)+join subtree over the ingest checkpoint on every
+    # consumer; signatures holds exactly one row per representative and
+    # is already materialized. The result needs no cut: it is either
+    # driver-built, with no upstream lineage (a localCheckpoint would
+    # only re-serialize 260k driver rows through parallelize, measured
+    # ~1.4-3.0 s), or checkpointed by the distributed loop.
+    clusters = connected_components(
         pairs.where("verified").select("a", "b"),
         vertices=(signatures if materialize_stages else reps).select(
             "file_id"
         ),
-        exact_edges=exact_edges,
+        members=exact_edges,
     )
     if materialize_stages:
-        # a driver-built cluster frame has no upstream lineage — a
-        # localCheckpoint would only re-serialize 260k driver rows
-        # through parallelize (measured ~1.4-3.0 s, level-independent)
-        if not driver_built:
-            clusters = clusters.localCheckpoint()
         stage_seconds["cluster"] = round(time.perf_counter() - t0, 2)
         if stage_hook is not None:
             stage_hook("cluster")

@@ -250,7 +250,7 @@ def run_dedup_resumable(
     Returns (DedupResult, {stage: "cached" | "computed"}, StageManifest).
     """
     from twinspect_spark.operators.buckets import unified_candidates
-    from twinspect_spark.operators.cc import cluster_with_members
+    from twinspect_spark.operators.cc import connected_components
     from twinspect_spark.operators.exact import collapse_exact_dups
     from twinspect_spark.operators.verify import (
         estimate_filter_candidates,
@@ -289,15 +289,12 @@ def run_dedup_resumable(
 
     def _clusters():
         # rep-graph CC + member expansion — mirror of pipeline.run_dedup
-        # (the stage write persists to parquet either way, so the
-        # driver-built flag is irrelevant here)
         reps, exact_edges = collapse_exact_dups(ingested)
-        clusters, _ = cluster_with_members(
+        return connected_components(
             pairs.where("verified").select("a", "b"),
             vertices=reps.select("file_id"),
-            exact_edges=exact_edges,
+            members=exact_edges,
         )
-        return clusters
 
     clusters = stage("clusters", _clusters)
     return (

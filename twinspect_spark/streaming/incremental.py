@@ -544,11 +544,11 @@ def _cluster_fold(
     """Merge this batch's verified edges into the cluster store WITHOUT
     touching existing rows: returns (arrival_rows, composed_remap).
 
-    Contraction (operators/cc.merge_components idiom): endpoints of the
-    new edges are mapped through their CURRENT assignment — fetched via
-    the pruned id_pt lookup, O(|endpoints|) — contracting every existing
-    component to its min-id representative; CC on that contracted graph
-    is O(new edges). The resulting (old_label → new_label) delta is
+    Contraction: endpoints of the new edges are mapped through their
+    CURRENT assignment (an endpoint with none maps to itself) — fetched
+    via the pruned id_pt lookup, O(|endpoints|) — contracting every
+    existing component to its min-id representative; CC on that
+    contracted graph is O(new edges). The resulting (old_label → new_label) delta is
     composed onto the store's remap; new files' arrival rows are written
     already-resolved, so only once-minimal labels ever enter the remap.
     ``cluster_id = min(file_id)`` survives: contracted node ids ARE
