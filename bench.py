@@ -763,7 +763,7 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
     import duckdb
 
     from twinspect_spark.config import DedupConfig
-    from twinspect_spark.session import package_zip
+    from twinspect_spark.session import default_driver_memory, package_zip
 
     replicas = int(os.environ.get("SPARK_GRAFT_SUBMIT_REPLICAS", "576"))
     corpus = os.environ.get(
@@ -790,9 +790,6 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
         "twinspect_spark", "__main__.py",
     )
 
-    # heap default clamped to host RAM, so the JVM starts on small hosts
-    host_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
-
     def submit() -> dict:
         t0 = time.perf_counter()
         p = subprocess.run(
@@ -806,7 +803,7 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
                 # runs on the 1g default and OOMs at replica scale
                 "--driver-memory",
                 os.environ.get("SPARK_GRAFT_SUBMIT_MEM")
-                or f"{min(max(8, 3 * cpus), 64, host_gb)}g",
+                or default_driver_memory(cpus),
                 "--py-files", zip_path,
                 entry,
                 "--input", corpus,

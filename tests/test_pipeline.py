@@ -196,6 +196,29 @@ def test_pair_kernels_run_on_shuffle_partitions(spark, result):
     assert outs[0] == outs[1] == outs[2]
 
 
+def test_warm_pass_compiles_no_class(spark, corpus):
+    """A second run_dedup pass over the same input finds every
+    whole-stage-codegen class in Spark's codegen cache: one pass's class
+    set (chain branch included) must fit the cache get_spark sizes."""
+    from pyspark.sql import functions as F
+
+    from twinspect_spark.operators.buckets import bucket_table
+
+    cfg = DedupConfig(jaccard_threshold=0.7, chain_bucket_size=4)
+    files = spark.createDataFrame(corpus.files)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount
+    res = run_dedup(files, cfg)
+    res.clusters.toPandas()
+    sizes = bucket_table(res.signatures, cfg).groupBy(
+        "space", "bucket_idx", "bucket_key"
+    ).count()
+    assert sizes.where(F.col("count") > cfg.chain_bucket_size).count() > 0
+    before = compiled()
+    run_dedup(files, cfg).clusters.toPandas()
+    assert compiled() - before == 0
+
+
 def _dfs_clusters(pairs, vertices, members):
     """Plain-Python reference: DFS from every node in id order, so each
     component is labelled by its min id; a member takes its rep's label,

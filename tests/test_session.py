@@ -6,7 +6,9 @@ from __future__ import annotations
 import pathlib
 import zipfile
 
-from twinspect_spark.session import package_zip
+import pytest
+
+from twinspect_spark.session import default_driver_memory, package_zip
 
 
 def test_package_zip_deterministic(tmp_path):
@@ -37,3 +39,21 @@ def test_get_spark_respects_existing_session_master(spark):
     spark-submit case is exercised for real in BASELINE.md; here we pin
     the standalone default)."""
     assert spark.sparkContext.master.startswith("local[")
+
+
+@pytest.mark.parametrize(
+    "host_gb, cores, want",
+    [
+        (15, 8, "15g"),    # 24 GB asked, clamped to host RAM
+        (15, 4, "12g"),    # 3 GB/core fits
+        (15, 1, "8g"),     # 8 GB floor
+        (256, 32, "64g"),  # 64 GB ceiling
+    ],
+)
+def test_default_driver_memory_clamped_to_host_ram(
+    monkeypatch, host_gb, cores, want
+):
+    page = 4096
+    sysconf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": (host_gb << 30) // page}
+    monkeypatch.setattr("os.sysconf", sysconf.__getitem__)
+    assert default_driver_memory(cores) == want

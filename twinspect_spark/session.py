@@ -4,6 +4,11 @@ Local-mode testing stands in for a multi-executor cluster; every setting
 here is cluster-safe (AQE, skew-join, Arrow batching) and the parallelism
 knob is a parameter so bench.py can run the same job at local[8] vs
 local[32] for the scaling-efficiency evidence (BASELINE.md targets).
+
+The driver heap defaults to `default_driver_memory(cores)`, clamped to
+host RAM. Spark's generated-code class cache is sized to hold the whole
+plan set of a `run_dedup` pass, so a warm pass compiles no class
+(`get_spark` has the measured counts).
 """
 
 from __future__ import annotations
@@ -38,12 +43,30 @@ def package_zip() -> str:
     return str(out)
 
 
+def default_driver_memory(cores: int) -> str:
+    """Driver heap for a `cores`-slot local session: 3 GB per core within
+    [8, 64] GB, clamped to host RAM so the JVM still starts on a small
+    host (8 cores asks 24 GB; a 15 GB host gets 15g). Used by `get_spark`
+    and by bench.py's spark-submit launcher."""
+    host_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 30
+    return f"{min(max(8, 3 * cores), 64, host_gb)}g"
+
+
 def get_spark(
     app_name: str = "twinspect_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or return the running) session with the engine's tuning.
+
+    `spark.sql.codegen.cache.maxEntries` is a static conf: it is read
+    once per JVM, when the first generated class is compiled, so it only
+    takes effect on the session that starts the JVM (a later getOrCreate
+    cannot change it). Local mode runs driver and executors in one JVM;
+    whether executors on a real cluster take the value from SparkConf is
+    not verified.
+    """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
     # Executor-faithful JVM sizing. A cluster executor runs N cores with
@@ -54,7 +77,7 @@ def get_spark(
     # spent 296 CPU-sec under the 90g heap vs 131 under a 24g heap with
     # GC threads pinned to the core count — a 2.3x tax that grew WITH
     # parallelism and corrupted scaling measurements (BASELINE.md r3).
-    mem = os.environ.get("SPARK_DRIVER_MEM") or f"{min(max(8, 3 * cores), 64)}g"
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(cores)
     gc_threads = max(2, min(cores, 16))
     gc_opts = (
         f"-XX:ParallelGCThreads={gc_threads} "
@@ -99,6 +122,20 @@ def get_spark(
         # files). On a real cluster the pair stream must shuffle, never
         # broadcast.
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        # Spark's default codegen class cache (100 entries) is smaller
+        # than the whole-stage-codegen class set the engine cycles
+        # through, measured on 4 vCPUs: one run_dedup pass compiles 104
+        # distinct classes on the perfbench `planted` workload and 83 on
+        # `longdoc`; run_dedup + run_dedup_resumable + process_batch in
+        # one session compile ~450. The cache is a size-bounded Guava
+        # cache that evicts per segment, so misses start below 100
+        # entries: with the default, every warm pass recompiled 50
+        # classes on `planted` and 28 on `longdoc` (each one restarting
+        # in the JVM interpreter), and the shared session recompiled 75
+        # per warm run_dedup of a 2,100-file corpus, 44 per resume and
+        # ~238 per stream batch. With 1000 entries the warm run_dedup
+        # and resume passes compile 0 classes, a stream batch 0-10.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
