@@ -923,7 +923,7 @@ def run_verifybench() -> dict:
         ingested = ingest_files(files, cfg).localCheckpoint()
         reps, _ = collapse_exact_dups(ingested)
         sigs = compute_signatures(reps, cfg).localCheckpoint()
-        cands = unified_candidates(sigs, cfg, materialize=True)
+        cands = unified_candidates(sigs, cfg)
         from twinspect_spark.operators.verify import (
             estimate_filter_candidates,
         )
@@ -1621,7 +1621,7 @@ def main() -> None:
                         / 1e9, 2,
                     ),
                 }
-                v = (res.stage_seconds or {}).get(s)
+                v = res.stage_seconds.get(s)
                 if v is not None and v <= stage_min.get(s, 1e18):
                     stage_min[s] = v
                     stage_metrics_at_min[s] = sm

@@ -70,9 +70,7 @@ def test_full_pipeline_groups(spark):
     from twinspect_spark.pipeline import run_dedup
 
     corpus = generate_corpus(n_clusters=8, transforms_per_original=2, seed=6)
-    res = run_dedup(
-        spark.createDataFrame(corpus.files), CFG, materialize_stages=False
-    )
+    res = run_dedup(spark.createDataFrame(corpus.files), CFG)
     clustered = res.ingested.select("file_id", "content_norm").join(
         res.clusters, "file_id"
     )

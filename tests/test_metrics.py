@@ -159,9 +159,7 @@ def test_robustness_on_synthetic_corpus(spark):
 
     corpus = generate_corpus(n_clusters=12, transforms_per_original=3, seed=3)
     cfg = DedupConfig(jaccard_threshold=0.5)
-    res = run_dedup(
-        spark.createDataFrame(corpus.files), cfg, materialize_stages=False
-    )
+    res = run_dedup(spark.createDataFrame(corpus.files), cfg)
     ids = res.ingested.select("file_id", "repo", "path")
     labels = spark.createDataFrame(corpus.labels).join(
         ids, ["repo", "path"]

@@ -92,7 +92,7 @@ def test_frontier_feeds_incremental_dedup(spark, corpus, tmp_path_factory):
 
     # incremental clusters over the admitted stream == one-shot batch
     # run over the same survivor set
-    batch = run_dedup(all_surv, CFG, materialize_stages=False)
+    batch = run_dedup(all_surv, CFG)
     want = {r["file_id"]: r["cluster_id"] for r in batch.clusters.collect()}
     got = {r["file_id"]: r["cluster_id"] for r in dedup.clusters().collect()}
     assert got == want

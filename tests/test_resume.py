@@ -125,12 +125,12 @@ def test_signatures_checkpoint_is_bucketed(spark, corpus, tmp_path_factory):
 
 
 def test_durable_path_matches_run_dedup(spark, corpus, tmp_path_factory):
-    """run_dedup_resumable runs the same candidate plan as run_dedup:
-    identical candidates and clusters."""
+    """run_dedup and run_dedup_resumable are two cuts over one
+    stage_graph: identical signatures, candidates, pairs and clusters."""
     from twinspect_spark.pipeline import run_dedup
 
-    def canon(df):
-        cols = sorted(df.columns)
+    def canon(df, drop=()):
+        cols = sorted(c for c in df.columns if c not in drop)
         return sorted(
             tuple(r[c] for c in cols) for r in df.select(*cols).collect()
         )
@@ -139,5 +139,80 @@ def test_durable_path_matches_run_dedup(spark, corpus, tmp_path_factory):
     files = spark.createDataFrame(corpus.files)
     durable, _, _ = run_dedup_resumable(spark, files, CFG, root)
     batch = run_dedup(files, CFG)
+    # micros is the signature UDF's per-row timing, not content
+    assert canon(durable.signatures, ("micros",)) == canon(
+        batch.signatures, ("micros",)
+    )
     assert canon(durable.candidates) == canon(batch.candidates)
+    assert canon(durable.pairs) == canon(batch.pairs)
     assert _clusters_map(durable) == _clusters_map(batch)
+
+
+def test_durable_stage_seconds(spark, corpus, tmp_path_factory):
+    """A cold durable run times every stage under the stage-hook names,
+    so ``--checkpoint --report`` renders the stage-timings table."""
+    from twinspect_spark.report import render_run_report
+
+    root = str(tmp_path_factory.mktemp("ckpt_secs"))
+    files = spark.createDataFrame(corpus.files)
+    res, _, _ = run_dedup_resumable(spark, files, CFG, root)
+    assert list(res.stage_seconds) == [
+        "ingest", "signatures", "buckets", "candidates", "verify", "cluster"
+    ]
+    assert all(v >= 0 for v in res.stage_seconds.values())
+    md = render_run_report("t", {}, stage_seconds=res.stage_seconds)
+    assert "## Stage timings" in md
+
+
+def test_cli_checkpoint_key_includes_input(spark, tmp_path):
+    """The CLI keys --checkpoint by its input: a second corpus under the
+    same root computes every stage and clusters its own files; the same
+    input again is served from the checkpoints."""
+    import argparse
+    import os
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from twinspect_spark.__main__ import input_token
+
+    root = str(tmp_path / "ckpt")
+
+    def args_for(path, min_words=None):
+        return argparse.Namespace(
+            input=path, format="parquet", min_words=min_words,
+            max_dup_bigram=None,
+        )
+
+    def run(seed):
+        path = str(tmp_path / f"files_{seed}.parquet")
+        if not os.path.exists(path):
+            corpus = generate_corpus(
+                n_clusters=3, transforms_per_original=1, n_distractors=6,
+                n_exact_dups=2, seed=seed,
+            )
+            pd.DataFrame(
+                corpus.files,
+                columns=["repo", "path", "commit", "lang", "content"],
+            ).to_parquet(path)
+        files = spark.read.parquet(path)
+        token = input_token(args_for(path), files)
+        # the curation gate changes the input, so it changes the key
+        assert input_token(args_for(path, min_words=5), files) != token
+        res, status, _ = run_dedup_resumable(spark, files, CFG, root, token)
+        want = {
+            r[0] for r in files.select(
+                F.xxhash64("repo", "path", "commit")
+            ).collect()
+        }
+        return token, status, set(_clusters_map(res)), want
+
+    tok_a, s_a, got_a, want_a = run(21)
+    assert set(s_a.values()) == {"computed"} and got_a == want_a
+    tok_b, s_b, got_b, want_b = run(22)
+    assert tok_b != tok_a and want_b != want_a
+    assert set(s_b.values()) == {"computed"}
+    assert got_b == want_b
+    tok_b2, s_b2, got_b2, _ = run(22)
+    assert tok_b2 == tok_b and set(s_b2.values()) == {"cached"}
+    assert got_b2 == want_b

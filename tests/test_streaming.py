@@ -31,9 +31,7 @@ def corpus():
 
 @pytest.fixture(scope="module")
 def batch_clusters(spark, corpus):
-    res = run_dedup(
-        spark.createDataFrame(corpus.files), CFG, materialize_stages=False
-    )
+    res = run_dedup(spark.createDataFrame(corpus.files), CFG)
     return {r["file_id"]: r["cluster_id"] for r in res.clusters.collect()}
 
 

@@ -8,8 +8,9 @@ Usage:
 
 Reads a files table (parquet with columns repo,path,commit,lang,content,
 or a raw directory tree with --format directory), runs the full dedup
-pipeline — resumable when --checkpoint is given — and writes the
-clusters table plus a run summary.
+pipeline — resumable when --checkpoint is given, keyed by the config
+fingerprint and the input (see input_token) — and writes the clusters
+table plus a run summary.
 
 Build the zip with twinspect_spark.session.package_zip(). When launched
 through plain ``python -m twinspect_spark`` (as in this sandbox), the
@@ -19,6 +20,7 @@ session factory creates the local-mode cluster itself.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -34,6 +36,20 @@ try:  # pragma: no cover - trivial import guard
     import twinspect_spark  # noqa: F401
 except ModuleNotFoundError:  # pragma: no cover
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def input_token(args: argparse.Namespace, files) -> str:
+    """Checkpoint-key token for the job's input: a digest of ``--input``,
+    ``--format``, the curation-gate flags and the files Spark lists for
+    the frame (``inputFiles``; parquet part names are unique per write,
+    so a rewritten input lists new files). A source with no file listing
+    (e.g. a catalog table that is not file-based) lists none, and is
+    keyed by the other parts only."""
+    spec = [
+        args.input, args.format, args.min_words, args.max_dup_bigram,
+        sorted(files.inputFiles()),
+    ]
+    return hashlib.sha256(json.dumps(spec).encode()).hexdigest()[:16]
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -104,7 +120,7 @@ def main(argv: list[str] | None = None) -> int:
         from twinspect_spark.plans.manifest import run_dedup_resumable
 
         res, status, _ = run_dedup_resumable(
-            spark, files, cfg, args.checkpoint
+            spark, files, cfg, args.checkpoint, input_token(args, files)
         )
     else:
         from twinspect_spark.pipeline import run_dedup

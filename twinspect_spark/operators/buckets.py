@@ -90,14 +90,14 @@ def bucket_table(
 def capped_bucket_table(
     signatures: DataFrame,
     cfg: DedupConfig,
-    materialize: bool = True,
     prefix_gate: bool = True,
 ) -> DataFrame:
     """Substage 1 of unified_candidates: bucket rows with per-bucket
     counts from ONE count-window pass on the self-join's own exchange,
     singleton and hot (> max_band_bucket) buckets dropped, result
-    optionally materialized (localCheckpoint) so both join sides and the
-    chain window read a materialized relation. Exposed separately so the
+    materialized (eager localCheckpoint) so both join sides and the
+    chain window read a materialized relation with accurate AQE stats
+    and no subtree re-execution. Exposed separately so the
     scaling-evidence bench (bench.py --candbench) can meter this
     exchange apart from the pair join."""
     from pyspark.sql import Window as W
@@ -123,21 +123,18 @@ def capped_bucket_table(
     b = b.withColumn("bucket", packed).drop(
         "space", "bucket_idx", "bucket_key"
     )
-    kept = (
+    return (
         b.withColumn("count", F.count("*").over(W.partitionBy("bucket")))
         .where(
             (F.col("count") > 1) & (F.col("count") <= cfg.max_band_bucket)
         )
+        .localCheckpoint()
     )
-    if materialize:
-        kept = kept.localCheckpoint()
-    return kept
 
 
 def unified_candidates(
     signatures: DataFrame,
     cfg: DedupConfig,
-    materialize: bool = True,
     prefix_gate: bool = True,
     margin: float = 0.15,
 ) -> DataFrame:
@@ -156,13 +153,12 @@ def unified_candidates(
     merged. Buckets beyond ``cfg.max_band_bucket`` are still dropped
     outright (hot-bucket cap, reported via hot_band_report).
 
-    ``materialize`` checkpoints the capped bucket table so the join
-    sides and the chain window read a materialized relation (accurate
-    AQE stats, no subtree re-execution); ``prefix_gate`` applies the
-    packed in-join MinHash prefix gate at (jaccard_threshold - 2*margin)
-    — same predicate estimate_filter_candidates would apply, hoisted
-    into the join stage."""
-    kept = capped_bucket_table(signatures, cfg, materialize, prefix_gate)
+    The capped bucket table is materialized eagerly (see
+    capped_bucket_table); ``prefix_gate`` applies the packed in-join
+    MinHash prefix gate at (jaccard_threshold - 2*margin) — same
+    predicate estimate_filter_candidates would apply, hoisted into the
+    join stage."""
+    kept = capped_bucket_table(signatures, cfg, prefix_gate)
     return bucket_pairs(kept, cfg, prefix_gate, margin)
 
 

@@ -1,15 +1,29 @@
 """End-to-end dedup pipeline: files → signatures → candidates → verified
 pairs → clusters.
 
-Stage graph (each stage a checkpointable DataFrame, SURVEY.md §7):
+The stage graph is declared once, in ``stage_graph`` (SURVEY.md §7):
 
-    files ──ingest──► ingested ──collapse exact dups──► reps
+    files ──ingest──► ingested ──collapse exact dups──► reps, exact_edges
       reps ──pandas UDF──► signatures
-      signatures ──LSH bands──► cand_lsh ─┐
-      signatures ──SimHash chunks──► cand_sim ─┤──union+distinct──► candidates
+      signatures ──LSH bands + SimHash chunks, one bucket self-join──►
+        capped buckets ──pair dedupe + MinHash estimate──► candidates
       candidates ──verify (cheap→expensive)──► pairs
       pairs(verified) ──CC──► rep clusters; exact-dup members inherit
         their rep's label ──► clusters
+
+Two cut strategies run it, and differ only in how a stage boundary
+materializes:
+
+- ``run_dedup`` cuts in memory with ``localCheckpoint``;
+- ``plans/manifest.run_dedup_resumable`` cuts at durable parquet
+  checkpoints and serves completed stages from them on restart.
+
+Two stage-name sets are fixed by the benchmark (perfbench/): the
+``stage_hook`` names ``ingest, signatures, buckets, candidates, verify,
+cluster``, fired in that order (perfbench attributes Spark jobs to
+stages by them), and the durable cut names ``manifest.STAGES`` =
+``ingested, signatures, candidates, pairs, clusters`` (the resume check
+compares its status against exactly these).
 
 The reference runs the analogous stages imperatively per benchmark
 (twinspect/__main__.py:42-63); here each stage is a declarative plan and
@@ -20,9 +34,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.ingest import ingest_files
@@ -43,43 +57,48 @@ class DedupResult:
     candidates: DataFrame
     pairs: DataFrame
     clusters: DataFrame
-    stage_seconds: dict[str, float] | None = None  # when stages materialized
+    stage_seconds: dict[str, float]  # hook name -> span seconds
 
 
-def run_dedup(
+def stage_graph(
     files: DataFrame,
-    cfg: DedupConfig | None = None,
-    materialize_stages: bool = True,
-    stage_hook=None,
+    cfg: DedupConfig,
+    cut: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    stage_hook: Callable[[str], None] | None = None,
 ) -> DedupResult:
-    """Full pipeline over files(repo, path, commit, lang, content).
+    """The dedup stage chain, declared once for every cut strategy.
 
-    Stage materialization (``materialize_stages``, default on) cuts each
-    stage boundary with ``localCheckpoint``: downstream plans read the
-    materialized result instead of inlining the upstream subtree. This is
-    load-bearing twice over —
-      * correctness of cost: one fused mega-plan re-executes shared
-        subtrees (signatures feed 4 consumers; measured 172 s fused vs
-        ~20 s staged at SF=0.1), and AQE only sees real row counts /
-        sizes at materialized boundaries (broadcast decisions, skew
-        splits);
-      * it is the in-memory twin of the parquet stage-checkpoint manifest
-        (plans/manifest.py) that gives the production pipeline
-        restartability — same cut points, durable medium.
+    ``cut(stage, build)`` materializes one stage boundary: it returns
+    the frame downstream stages read, calling ``build()`` only when it
+    computes the stage. Cut names are ``manifest.STAGES`` plus
+    ``exact_edges``, which only the in-memory cut materializes.
+    ``mark(name)`` ends the span since the previous mark, records it in
+    ``stage_seconds`` under the hook name and fires ``stage_hook(name)``;
+    the ``buckets`` mark sits inside the candidates build, so it fires
+    only when that stage computes.
     """
-    cfg = cfg or DedupConfig()
     stage_seconds: dict[str, float] = {}
+    t_prev = time.perf_counter()
 
-    def cut(df: DataFrame, stage: str = "") -> DataFrame:
-        if not materialize_stages:
-            return df
-        t0 = time.perf_counter()
-        out = df.localCheckpoint()  # eager: materializes the stage now
-        if stage:
-            stage_seconds[stage] = round(time.perf_counter() - t0, 2)
-            if stage_hook is not None:
-                stage_hook(stage)  # e.g. bench REST-metrics snapshots
-        return out
+    def mark(name: str) -> None:
+        nonlocal t_prev
+        stage_seconds[name] = round(time.perf_counter() - t_prev, 2)
+        if stage_hook is not None:
+            stage_hook(name)  # e.g. bench REST-metrics snapshots
+        t_prev = time.perf_counter()  # the hook's own time is no stage's
+
+    ingested = cut("ingested", lambda: ingest_files(files, cfg))
+    reps, exact_edges = collapse_exact_dups(ingested)
+    # the exact-edge subtree (narrow groupBy(sha256) + join) is consumed
+    # only by the cluster stage; left lazy in memory it re-executes
+    # THERE, inflating the near-fixed cluster cut that the scaling
+    # composite is most sensitive to (round-4 floors: cluster 6.9 s
+    # local[2] / 5.3 s local[8]). The in-memory cut materializes it
+    # here, inside the ingest+exact-collapse span, where its cost
+    # belongs; the durable cut keeps it lazy, so a fully cached resume
+    # computes nothing.
+    exact_edges = cut("exact_edges", lambda: exact_edges)
+    mark("ingest")
 
     # The signatures cut stays a ROW-format localCheckpoint, measured
     # (round 3, 1M files, local[8], best-of-2): the bucket-explode
@@ -90,79 +109,73 @@ def run_dedup(
     # column-pruning upside for the estimate stage's narrow joins is
     # captured instead by a narrow side-checkpoint inside
     # estimate_filter_candidates(materialize=True).
-    t0 = time.perf_counter()
-    ingested = ingest_files(files, cfg)
-    if materialize_stages:
-        ingested = ingested.localCheckpoint()
-    reps, exact_edges = collapse_exact_dups(ingested)
-    if materialize_stages:
-        # the exact-edge subtree (narrow groupBy(sha256) + join) is
-        # consumed only by the cluster stage; left lazy it re-executes
-        # THERE, inflating the near-fixed cluster cut that the scaling
-        # composite is most sensitive to (round-4 floors: cluster 6.9 s
-        # local[2] / 5.3 s local[8]). Materialize it here, inside the
-        # ingest+exact-collapse stage window, where its cost belongs.
-        exact_edges = exact_edges.localCheckpoint()
-        stage_seconds["ingest"] = round(time.perf_counter() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("ingest")
-    signatures = cut(compute_signatures(reps, cfg), "signatures")
+    signatures = cut("signatures", lambda: compute_signatures(reps, cfg))
+    mark("signatures")
 
-    # LSH bands and SimHash chunks generate candidates through ONE
-    # unified bucket self-join (operators/buckets.py) — one sizes
-    # aggregation, one cap, one join, one SO3 pair-dedupe — instead of
-    # two parallel shuffle chains. Pair-dedup happens BEFORE the
-    # MinHash-estimate filter joins signature arrays onto distinct pairs
-    # (see estimate_filter_candidates for the cost asymmetry), so only
-    # est-filtered survivors are materialized.
-    # The packed MinHash prefix gate runs inside the bucket self-join
-    # (unified_candidates prefix_gate) — the pair stream entering the
-    # dedupe shuffle is already est-plausible, so the estimate filter
-    # joins full signatures onto survivors only (pre_gated skips its
-    # redundant HOF gate).
-    t0 = time.perf_counter()
-    deduped = unified_candidates(
-        signatures, cfg, materialize=materialize_stages
-    )
-    if materialize_stages:
+    def candidates() -> DataFrame:
+        # LSH bands and SimHash chunks generate candidates through ONE
+        # unified bucket self-join (operators/buckets.py) — one sizes
+        # aggregation, one cap, one join, one SO3 pair-dedupe — instead
+        # of two parallel shuffle chains. Pair-dedup happens BEFORE the
+        # MinHash-estimate filter joins signature arrays onto distinct
+        # pairs (see estimate_filter_candidates for the cost asymmetry),
+        # so only est-filtered survivors are materialized. The packed
+        # MinHash prefix gate runs inside the bucket self-join, so the
+        # estimate filter skips its redundant HOF gate (pre_gated).
+        deduped = unified_candidates(signatures, cfg)
         # the capped bucket table materializes eagerly inside
         # unified_candidates — attribute it, or it vanishes from the
         # stage table while still inflating wall (round-3 lesson)
-        stage_seconds["buckets"] = round(time.perf_counter() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("buckets")
-    candidates = cut(
-        estimate_filter_candidates(
-            deduped, signatures, cfg, pre_gated=True,
-            materialize=materialize_stages,
-        ),
-        "candidates",
-    )
+        mark("buckets")
+        return estimate_filter_candidates(
+            deduped, signatures, cfg, pre_gated=True, materialize=True
+        )
 
-    pairs = cut(verify_pairs(candidates, ingested, cfg), "verify")
-    t0 = time.perf_counter()
+    candidates = cut("candidates", candidates)
+    mark("candidates")
+    pairs = cut("pairs", lambda: verify_pairs(candidates, ingested, cfg))
+    mark("verify")
     # CC runs on the REPRESENTATIVE graph only (pair edges are rep-to-rep
     # by construction); exact-dup members inherit their rep's label (see
-    # connected_components). Vertices come from the SIGNATURES
-    # checkpoint, not the lazy `reps` relation — reps re-derives the
-    # groupBy(sha256)+join subtree over the ingest checkpoint on every
-    # consumer; signatures holds exactly one row per representative and
-    # is already materialized. The result needs no cut: it is either
-    # driver-built, with no upstream lineage (a localCheckpoint would
-    # only re-serialize 260k driver rows through parallelize, measured
-    # ~1.4-3.0 s), or checkpointed by the distributed loop.
-    clusters = connected_components(
-        pairs.where("verified").select("a", "b"),
-        vertices=(signatures if materialize_stages else reps).select(
-            "file_id"
+    # connected_components). Vertices come from the SIGNATURES cut, not
+    # the lazy `reps` relation — reps re-derives the groupBy(sha256)+join
+    # subtree over the ingest cut on every consumer; signatures holds
+    # exactly one row per representative and is already materialized.
+    clusters = cut(
+        "clusters",
+        lambda: connected_components(
+            pairs.where("verified").select("a", "b"),
+            vertices=signatures.select("file_id"),
+            members=exact_edges,
         ),
-        members=exact_edges,
     )
-    if materialize_stages:
-        stage_seconds["cluster"] = round(time.perf_counter() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("cluster")
+    mark("cluster")
     return DedupResult(
-        ingested, signatures, candidates, pairs, clusters,
-        stage_seconds or None,
+        ingested, signatures, candidates, pairs, clusters, stage_seconds
     )
+
+
+def run_dedup(
+    files: DataFrame,
+    cfg: DedupConfig | None = None,
+    stage_hook: Callable[[str], None] | None = None,
+) -> DedupResult:
+    """Full pipeline over files(repo, path, commit, lang, content): the
+    stage_graph with every boundary cut by ``localCheckpoint``, so
+    downstream plans read the materialized result instead of inlining
+    the upstream subtree. One fused mega-plan re-executes shared
+    subtrees (signatures feed 4 consumers; measured 172 s fused vs ~20 s
+    staged at SF=0.1), and AQE only sees real row counts / sizes at
+    materialized boundaries (broadcast decisions, skew splits).
+    ``stage_hook(name)`` fires at each stage end (see stage_graph).
+    """
+
+    def cut(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
+        df = build()
+        # clusters need no cut: connected_components returns them either
+        # driver-built, with no upstream lineage (a localCheckpoint would
+        # only re-serialize 260k driver rows through parallelize,
+        # measured ~1.4-3.0 s), or checkpointed by the distributed loop
+        return df if stage == "clusters" else df.localCheckpoint()
+
+    return stage_graph(files, cfg or DedupConfig(), cut, stage_hook)

@@ -31,11 +31,13 @@ import os
 import re
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twinspect_spark.config import DedupConfig
+from twinspect_spark.pipeline import stage_graph
 
 STAGES = ["ingested", "signatures", "candidates", "pairs", "clusters"]
 
@@ -243,68 +245,25 @@ def run_dedup_resumable(
     input_token: str = "default",
     run_id: str | None = None,
 ):
-    """The durable twin of pipeline.run_dedup: identical stage graph, but
-    every stage boundary is a parquet checkpoint and completed stages are
-    skipped on restart (left as read-from-checkpoint, zero recompute).
+    """pipeline.stage_graph with every ``STAGES`` boundary cut at a
+    parquet checkpoint: a completed stage is read from its checkpoint
+    (zero recompute), any other is computed and written. The in-memory
+    ``exact_edges`` cut stays lazy here. ``stage_seconds`` carries the
+    same hook-name spans as ``run_dedup``.
 
     Returns (DedupResult, {stage: "cached" | "computed"}, StageManifest).
     """
-    from twinspect_spark.operators.buckets import unified_candidates
-    from twinspect_spark.operators.cc import connected_components
-    from twinspect_spark.operators.exact import collapse_exact_dups
-    from twinspect_spark.operators.verify import (
-        estimate_filter_candidates,
-        verify_pairs,
-    )
-    from twinspect_spark.pipeline import DedupResult
-    from twinspect_spark.signatures import compute_signatures
-
     run_id = run_id or uuid.uuid4().hex[:12]
     man = StageManifest(spark, checkpoint_root, cfg, input_token)
     status: dict[str, str] = {}
 
-    def stage(name: str, thunk):
-        if man.is_complete(name):
-            status[name] = "cached"
-            return man.read(name)
-        status[name] = "computed"
-        return man.write(name, thunk(), run_id)
+    def cut(stage: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if stage not in STAGES:
+            return build()
+        if man.is_complete(stage):
+            status[stage] = "cached"
+            return man.read(stage)
+        status[stage] = "computed"
+        return man.write(stage, build(), run_id)
 
-    ingested = stage("ingested", lambda: ingest_stage(files, cfg))
-
-    def _sigs():
-        reps, _ = collapse_exact_dups(ingested)
-        return compute_signatures(reps, cfg)
-
-    signatures = stage("signatures", _sigs)
-
-    def _cands():
-        deduped = unified_candidates(signatures, cfg)
-        return estimate_filter_candidates(
-            deduped, signatures, cfg, pre_gated=True
-        )
-
-    candidates = stage("candidates", _cands)
-    pairs = stage("pairs", lambda: verify_pairs(candidates, ingested, cfg))
-
-    def _clusters():
-        # rep-graph CC + member expansion — mirror of pipeline.run_dedup
-        reps, exact_edges = collapse_exact_dups(ingested)
-        return connected_components(
-            pairs.where("verified").select("a", "b"),
-            vertices=reps.select("file_id"),
-            members=exact_edges,
-        )
-
-    clusters = stage("clusters", _clusters)
-    return (
-        DedupResult(ingested, signatures, candidates, pairs, clusters),
-        status,
-        man,
-    )
-
-
-def ingest_stage(files: DataFrame, cfg: DedupConfig) -> DataFrame:
-    from twinspect_spark.ingest import ingest_files
-
-    return ingest_files(files, cfg)
+    return stage_graph(files, cfg, cut), status, man
