@@ -751,11 +751,12 @@ def run_submitbench(sf_dir: str, cpus: int) -> dict:
     round-3 item 7): the real ship path (`spark-submit --py-files
     pkg.zip`, north rule) over the scaled replica corpus with a durable
     stage-checkpoint manifest. Cold run computes + checkpoints every
-    stage; the resume run invalidates pairs+clusters only, so it must
-    serve ingest/signatures/candidates from the manifest — signatures
-    coming up as the BUCKETED table (plans/manifest.BUCKETED_STAGES) —
-    and recompute just the invalidated tail. Per-stage walls come from
-    the manifest's own _metrics/stages table (run_id-scoped)."""
+    stage as plain parquet; the resume run invalidates pairs+clusters
+    only, so it must serve ingest/signatures/candidates from the
+    manifest and recompute just the invalidated tail. Per-stage walls
+    come from the manifest's own _metrics/stages table (run_id-scoped).
+    Results recorded before the signatures checkpoint became plain
+    parquet were measured with a hash-bucketed layout, since removed."""
     import glob
     import shutil as _sh
     import subprocess
@@ -869,8 +870,7 @@ _VERIFY_PREP = "/tmp/twinspect_verifybench"
 
 def _verifybench_worker(cores: int) -> None:
     """Time verify_pairs ALONE on pre-written candidates + ingested
-    state (identical input both arms; TWINSPECT_VERIFY_NO_CACHE
-    selects the arm). Isolates the round-4 shingle-cache change from
+    state (identical input at every level), isolated from
     composite-run host drift."""
     from pyspark.sql import functions as F
 
@@ -893,7 +893,6 @@ def _verifybench_worker(cores: int) -> None:
     wall = time.perf_counter() - t0
     print(json.dumps({
         "cores": cores,
-        "cache": os.environ.get("TWINSPECT_VERIFY_NO_CACHE") != "1",
         "wall_sec": round(wall, 2),
         "verified_pairs": n[0],
         "checksum": int(n[1]),
@@ -902,9 +901,9 @@ def _verifybench_worker(cores: int) -> None:
 
 
 def run_verifybench() -> dict:
-    """A/B the verify shingle cache on the work-bound corpus: prep
-    candidates once (untimed), then interleave cache-on/off workers at
-    both scaling levels, best-of-2 per arm."""
+    """Time the verify stage alone on the work-bound corpus: prep
+    candidates once (untimed), then interleave workers at both scaling
+    levels, best-of-2 per level."""
     import subprocess
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -928,9 +927,7 @@ def run_verifybench() -> dict:
             estimate_filter_candidates,
         )
 
-        est = estimate_filter_candidates(
-            cands, sigs, cfg, pre_gated=True, materialize=True
-        )
+        est = estimate_filter_candidates(cands, sigs, cfg)
         est.write.mode("overwrite").parquet(f"{_VERIFY_PREP}/candidates")
         ingested.select(
             "file_id", "content_norm", "size"
@@ -941,14 +938,11 @@ def run_verifybench() -> dict:
         int(os.environ.get("SPARK_GRAFT_SCALE_N", "2")),
         int(os.environ.get("SPARK_GRAFT_SCALE_4N", "8")),
     )
-    best: dict[tuple[int, bool], dict] = {}
-    plan = [(lo, False), (lo, True), (hi, False), (hi, True)]
-    for cores, no_cache in plan + list(reversed(plan)):
-        env = dict(os.environ)
-        env["TWINSPECT_VERIFY_NO_CACHE"] = "1" if no_cache else "0"
+    best: dict[int, dict] = {}
+    for cores in (lo, hi, hi, lo):
         p = subprocess.run(
             [sys.executable, __file__, "--verifybench-worker", str(cores)],
-            capture_output=True, text=True, env=env,
+            capture_output=True, text=True,
         )
         line = [
             ln for ln in p.stdout.splitlines() if ln.startswith("{")
@@ -956,29 +950,18 @@ def run_verifybench() -> dict:
         if not line:
             raise RuntimeError(p.stdout[-1500:] + p.stderr[-1500:])
         r = json.loads(line[-1])
-        k = (cores, no_cache)
-        if k not in best or r["wall_sec"] < best[k]["wall_sec"]:
-            best[k] = r
-    # identical results across arms, or the A/B is void
+        if cores not in best or r["wall_sec"] < best[cores]["wall_sec"]:
+            best[cores] = r
+    # identical results at both levels, or the timing is void
     sums = {b["checksum"] for b in best.values()}
-    out = {
+    return {
         "metric": "verifybench",
         "levels": [lo, hi],
         "results_identical": len(sums) == 1,
-        "verified_pairs": best[(lo, False)]["verified_pairs"],
-        "per_arm": {
-            f"local[{c}]_{'nocache' if nc else 'cache'}":
-                best[(c, nc)]["wall_sec"]
-            for (c, nc) in best
-        },
-        "speedup_lo": round(
-            best[(lo, True)]["wall_sec"] / best[(lo, False)]["wall_sec"], 3
-        ),
-        "speedup_hi": round(
-            best[(hi, True)]["wall_sec"] / best[(hi, False)]["wall_sec"], 3
-        ),
+        "verified_pairs": best[lo]["verified_pairs"],
+        "per_level": {f"local[{c}]": best[c]["wall_sec"] for c in (lo, hi)},
+        "speedup": round(best[lo]["wall_sec"] / best[hi]["wall_sec"], 3),
     }
-    return out
 
 
 def _run_worker_json(cmd: list[str], retries: int = 1) -> dict:
@@ -1294,7 +1277,6 @@ def _candbench_worker(cores: int) -> None:
         bucket_pairs(capped_bucket_table(sig.limit(cores * 500), cfg), cfg),
         sig,
         cfg,
-        pre_gated=True,
     ).count()
     trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "2"))
     best: dict[str, dict] = {}
@@ -1311,9 +1293,7 @@ def _candbench_worker(cores: int) -> None:
         w_join = time.perf_counter() - t0
         m2 = _rest_metrics(spark)
         t0 = time.perf_counter()
-        n_est = estimate_filter_candidates(
-            pairs, sig, cfg, pre_gated=True, materialize=True
-        ).count()
+        n_est = estimate_filter_candidates(pairs, sig, cfg).count()
         w_est = time.perf_counter() - t0
         m3 = _rest_metrics(spark)
         for name, wall, lo_, hi_ in (

@@ -86,42 +86,31 @@ def test_config_change_invalidates_key(spark, corpus, tmp_path_factory):
     assert all(v == "computed" for v in s2.values())
 
 
-def test_signatures_checkpoint_is_bucketed(spark, corpus, tmp_path_factory):
-    """VERDICT round-3 item 3: the resumed signature store comes up as a
-    hash-bucketed table, so the candidate-phase joins on file_id plan a
-    bucketed scan (no signature-side Exchange re-shuffling the store on
-    every resume)."""
+def test_durable_run_is_catalog_free(spark, corpus, tmp_path_factory):
+    """Every stage checkpoint, signatures included, is plain parquet: a
+    cold run and a resume register no catalog table, and reading a
+    stage back is a plain parquet read of its path."""
     root = str(tmp_path_factory.mktemp("ckpt4"))
     files = spark.createDataFrame(corpus.files)
+
+    def tables():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = tables()
     _, _, man = run_dedup_resumable(spark, files, CFG, root)
+    man.invalidate("pairs")
+    man.invalidate("clusters")
+    _, status, _ = run_dedup_resumable(spark, files, CFG, root)
+    assert status["signatures"] == "cached"
+    assert not {t for t in tables() - before if t.startswith("ckpt_")}
 
-    # the checkpoint itself carries the bucket layout
-    import json as _json
-    import os as _os
+    def rows(df):
+        return sorted(repr(r) for r in df.collect())
 
-    with open(man._done_path("signatures")) as f:
-        meta = _json.load(f)
-    assert meta["bucketed"] == {"key": "file_id", "n": 32}
-    part_files = [
-        p for p in _os.listdir(man.stage_path("signatures"))
-        if p.startswith("part-")
-    ]
-    assert len(part_files) >= 1
-
-    # a RESUMED session (fresh catalog, simulated by dropping the table)
-    # re-registers the bucketed table; a join on file_id plans a
-    # bucketed scan with no Exchange above the signature side
-    spark.sql(f"DROP TABLE IF EXISTS {man._table_name('signatures')}")
     sigs = man.read("signatures")
-    from pyspark.sql import functions as F
-
-    ids = sigs.select(F.col("file_id").alias("a")).limit(10)
-    joined = sigs.join(ids.hint("shuffle_hash"), sigs.file_id == ids.a)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan, plan
-    # byte-identical content vs a plain parquet read of the same files
     plain = spark.read.parquet(man.stage_path("signatures"))
-    assert sigs.count() == plain.count()
+    assert sigs.columns == plain.columns
+    assert rows(sigs) == rows(plain)
 
 
 def test_durable_path_matches_run_dedup(spark, corpus, tmp_path_factory):

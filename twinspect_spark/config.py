@@ -78,6 +78,12 @@ class DedupConfig:
                 "pigeonhole violated: chunked equi-join only guarantees recall "
                 "for hamming <= simhash_chunks - 1"
             )
+        if self.bands > 64 or self.simhash_chunks > 64:
+            # bucket_idx gets 6 bits of the packed bucket key
+            # (operators/buckets.capped_bucket_table)
+            raise ValueError(
+                "packed bucket key supports at most 64 buckets per space"
+            )
 
     @property
     def rows_per_band(self) -> int:

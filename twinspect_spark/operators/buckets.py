@@ -27,8 +27,9 @@ latency that 4× the cores cannot shrink):
   lane prefixes (operators/verify.packed_prefix_cols) — pure integer
   codegen, no interpreted HOFs, no signature join — so the pair stream
   entering the dedupe shuffle is already est-plausible. The estimate
-  filter then joins full signatures onto survivors only
-  (estimate_filter_candidates(pre_gated=True)).
+  filter then joins lane prefixes onto survivors only; its kernel
+  re-applies the same predicate on the same bits, a no-op on these
+  pairs (operators/verify.py: one gate, two sites).
 
 The SimHash Hamming post-filter (bit_count ≤ d) applies only to
 chunk-space pairs; simhash codes ride along as join payload (16 bytes)
@@ -44,6 +45,7 @@ from twinspect_spark.config import DedupConfig
 from twinspect_spark.operators.verify import (
     packed_prefix_cols,
     packed_prefix_frac,
+    prefix_gate_floor,
 )
 
 
@@ -87,11 +89,7 @@ def bucket_table(
     return b.select(*names, "e.space", "e.bucket_idx", "e.bucket_key")
 
 
-def capped_bucket_table(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    prefix_gate: bool = True,
-) -> DataFrame:
+def capped_bucket_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Substage 1 of unified_candidates: bucket rows with per-bucket
     counts from ONE count-window pass on the self-join's own exchange,
     singleton and hot (> max_band_bucket) buckets dropped, result
@@ -102,19 +100,16 @@ def capped_bucket_table(
     exchange apart from the pair join."""
     from pyspark.sql import Window as W
 
-    b = bucket_table(signatures, cfg, with_prefix=prefix_gate)
+    b = bucket_table(signatures, cfg, with_prefix=True)
     # pack (space, bucket_idx, bucket_key) into ONE long before the
-    # exchange: bits 63..62 space, 61..56 bucket_idx, 55..0 the low 56
-    # bits of the key. This is the byte-heaviest shuffle in the
-    # pipeline and UnsafeRow spends an 8-byte slot per column — packing
-    # drops 16 bytes/row. Truncating the 64-bit band hash to 56 bits
+    # exchange: bits 63..62 space, 61..56 bucket_idx (DedupConfig caps
+    # bands and simhash_chunks at 64), 55..0 the low 56 bits of the
+    # key. This is the byte-heaviest shuffle in the pipeline and
+    # UnsafeRow spends an 8-byte slot per column — packing drops 16
+    # bytes/row. Truncating the 64-bit band hash to 56 bits
     # can only MERGE buckets (a superset of candidate pairs, cleaned by
     # the gates/verify downstream) — recall is preserved by
     # construction; the collision rate at 2^56 per band is negligible.
-    if cfg.bands > 64 or cfg.simhash_chunks > 64:
-        raise ValueError(
-            "packed bucket key supports at most 64 buckets per space"
-        )
     packed = (
         F.shiftleft(F.col("space").cast("long"), 62)
         .bitwiseOR(F.shiftleft(F.col("bucket_idx").cast("long"), 56))
@@ -132,12 +127,7 @@ def capped_bucket_table(
     )
 
 
-def unified_candidates(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    prefix_gate: bool = True,
-    margin: float = 0.15,
-) -> DataFrame:
+def unified_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """→ (a, b, src) distinct candidate pairs from both spaces, a < b.
     src = 'lsh' | 'simhash' (min over contributing spaces).
 
@@ -151,23 +141,18 @@ def unified_candidates(
     adjacent, so the chain stays within clusters and recall survives;
     cross-cluster chain links are rejected by exact verification, never
     merged. Buckets beyond ``cfg.max_band_bucket`` are still dropped
-    outright (hot-bucket cap, reported via hot_band_report).
+    outright (hot-bucket cap). Nothing on the job path counts or reports
+    the dropped buckets yet; the run record's cap-drop counter (ROADMAP
+    open item 1) is where that count belongs.
 
     The capped bucket table is materialized eagerly (see
-    capped_bucket_table); ``prefix_gate`` applies the packed in-join
-    MinHash prefix gate at (jaccard_threshold - 2*margin) — same
-    predicate estimate_filter_candidates would apply, hoisted into the
-    join stage."""
-    kept = capped_bucket_table(signatures, cfg, prefix_gate)
-    return bucket_pairs(kept, cfg, prefix_gate, margin)
+    capped_bucket_table); the join applies the packed MinHash prefix
+    gate at verify.prefix_gate_floor(cfg)."""
+    kept = capped_bucket_table(signatures, cfg)
+    return bucket_pairs(kept, cfg)
 
 
-def bucket_pairs(
-    kept: DataFrame,
-    cfg: DedupConfig,
-    prefix_gate: bool = True,
-    margin: float = 0.15,
-) -> DataFrame:
+def bucket_pairs(kept: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Substage 2 of unified_candidates: self-join small buckets
     (all-pairs) + spanning-chain big buckets, in-join Hamming and packed
     prefix gates, then the SO3 pair dedupe. See unified_candidates for
@@ -183,23 +168,14 @@ def bucket_pairs(
         F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
         <= cfg.hamming_threshold
     )
-    gate_ok = (
-        packed_prefix_frac(cfg, "mpa", "mpb")
-        >= cfg.jaccard_threshold - 2 * margin
-        if prefix_gate
-        else F.lit(True)
-    )
+    gate_ok = packed_prefix_frac(cfg, "mpa", "mpb") >= prefix_gate_floor(cfg)
     src_col = F.when(is_lsh, "lsh").otherwise("simhash")
+    mp = [c for c in payload if c.startswith("mp")]
 
     def side(df: DataFrame, tag: str) -> DataFrame:
         cols = [F.col("file_id").alias("a" if tag == "a" else "b"),
                 F.col("simhash").alias(f"sim_{tag}")]
-        if prefix_gate:
-            cols += [
-                F.col(c).alias(f"mp{tag}{c[2:]}")
-                for c in payload
-                if c.startswith("mp")
-            ]
+        cols += [F.col(c).alias(f"mp{tag}{c[2:]}") for c in mp]
         return df.select(*keys, *cols)
 
     # SHUFFLE_HASH, not sort-merge: the bucket self-join is the
@@ -226,17 +202,13 @@ def bucket_pairs(
     nxt_cols = [
         F.col("file_id").alias("nxt_id"),
         F.col("simhash").alias("nxt_sim"),
+        *[F.col(c).alias(f"mpb{c[2:]}") for c in mp],
     ]
-    if prefix_gate:
-        nxt_cols += [
-            F.col(c).alias(f"mpb{c[2:]}") for c in payload if c.startswith("mp")
-        ]
     nxt = ranked.select(*keys, (F.col("rk") - 1).alias("rk"), *nxt_cols)
-    this_cols = [*keys, "rk", "file_id", "simhash"]
-    if prefix_gate:
-        this_cols += [
-            F.col(c).alias(f"mpa{c[2:]}") for c in payload if c.startswith("mp")
-        ]
+    this_cols = [
+        *keys, "rk", "file_id", "simhash",
+        *[F.col(c).alias(f"mpa{c[2:]}") for c in mp],
+    ]
     chained = (
         ranked.select(*this_cols)
         .join(nxt.hint("shuffle_hash"), [*keys, "rk"])
@@ -246,12 +218,8 @@ def bucket_pairs(
             F.col("simhash").alias("sim_a"),
             F.col("nxt_sim").alias("sim_b"),
             "bucket",
-            *(
-                [f"mpa{c[2:]}" for c in payload if c.startswith("mp")]
-                + [f"mpb{c[2:]}" for c in payload if c.startswith("mp")]
-                if prefix_gate
-                else []
-            ),
+            *[f"mpa{c[2:]}" for c in mp],
+            *[f"mpb{c[2:]}" for c in mp],
         )
         .where(hamming_ok)
         .where(gate_ok)

@@ -15,8 +15,9 @@ Mitigations, in order:
   1. exact-dup collapse upstream (operators/exact.py) removes identical
      content entirely;
   2. a frequency cap drops buckets larger than ``cfg.max_band_bucket``
-     from pair generation (the dropped buckets are reported, not silent —
-     ``hot_band_report``);
+     from pair generation. Nothing on the job path counts or reports
+     the dropped buckets yet; the run record's cap-drop counter (ROADMAP
+     open item 1) is where that count belongs;
   3. AQE skew-join splitting handles the surviving moderate skew.
 """
 
@@ -41,16 +42,6 @@ def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     return signatures.select(
         "file_id", F.posexplode(hashes).alias("band_idx", "band_hash")
-    )
-
-
-def hot_band_report(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Buckets over the frequency cap — logged to metrics, excluded from
-    pair generation (capped-coverage is reported, never silent)."""
-    return (
-        bands.groupBy("band_idx", "band_hash")
-        .count()
-        .where(F.col("count") > cfg.max_band_bucket)
     )
 
 

@@ -65,8 +65,3 @@ def simhash_candidates(
     )
     return pairs.distinct() if dedupe else pairs
 
-
-def hamming_expr(a, b):
-    """SF1/SF2: Hamming distance between two 64-bit codes as a codegen'd
-    column expression."""
-    return F.bit_count(a.bitwiseXOR(b))

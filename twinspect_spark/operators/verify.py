@@ -6,8 +6,8 @@ is exactly the shape we need, ordered explicitly because Catalyst has no
 UDF cost model (SURVEY.md §4):
 
   1. column predicates   : length-variation bound (F4), JVM codegen
-  2. MinHash estimate    : fraction of equal lanes — vectorized pandas
-                           UDF (Catalyst's zip_with/aggregate HOFs are
+  2. MinHash estimate    : fraction of equal lanes — vectorized Arrow
+                           map (Catalyst's zip_with/aggregate HOFs are
                            interpreted per element, ~100x slower here)
   3. exact n-gram Jaccard: pandas UDF (numpy set ops) on survivors
   4. LCS scoring         : suffix-automaton longest-common-substring,
@@ -15,6 +15,14 @@ UDF cost model (SURVEY.md §4):
 
 Stages 3-4 see only candidate pairs (tiny vs n²); content is joined in at
 the last moment so it never rides through the band shuffles.
+
+There is ONE MinHash prefix gate, one predicate: the top ``_PACK_BITS``
+bits of the first min(16, num_perm) lanes agree on at least
+``prefix_gate_floor(cfg)`` of those lanes. It runs inside the bucket
+self-join on packed columns (packed_prefix_cols / packed_prefix_frac,
+operators/buckets.py) and is re-applied, on the same bits, by the
+estimate kernel (_est_filter_arrow) — a no-op on pairs from the bucket
+join, the whole gate for any other candidate source (streaming).
 
 Partitioning rule for the two Python pair kernels (stage 2's mapInArrow,
 stages 3-4's mapInPandas): their pair input is hash-repartitioned by ``b``
@@ -29,8 +37,6 @@ which the verify kernel's per-partition shingle cache relies on.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -57,6 +63,18 @@ _PREFIX_LANES = 16
 _PACK_BITS = 8
 _LANES_PER_WORD = 64 // _PACK_BITS
 _LANE_MASK = (1 << _PACK_BITS) - 1
+# Triage margin around jaccard_threshold t: the estimate filter keeps
+# est ≥ t − margin, and the prefix gate keeps a prefix-lane match
+# fraction ≥ t − 2·margin (prefix_gate_floor).
+ESTIMATE_MARGIN = 0.15
+
+
+def prefix_gate_floor(cfg: DedupConfig) -> float:
+    """Least fraction of matching packed prefix lanes a candidate pair
+    needs to pass the MinHash prefix gate, t − 2·margin. Both gate sites
+    (the bucket join, buckets.bucket_pairs, and the estimate kernel,
+    _est_filter_arrow) compare against this one value."""
+    return cfg.jaccard_threshold - 2 * ESTIMATE_MARGIN
 
 
 def packed_prefix_cols(cfg: DedupConfig, minhash_col: str = "minhash",
@@ -85,13 +103,10 @@ def packed_prefix_cols(cfg: DedupConfig, minhash_col: str = "minhash",
 
 def packed_prefix_frac(cfg: DedupConfig, a_prefix: str, b_prefix: str):
     """Fraction of packed prefix sublanes equal between two rows carrying
-    ``packed_prefix_cols`` under ``a_prefix``/``b_prefix`` names.
-
-    Semantics vs the 32-bit HOF gate in estimate_filter_candidates:
-    short prefixes collide at 2^-_PACK_BITS per lane, so this gate
-    accepts a superset of the 32-bit gate's pairs — recall-preserving;
-    the few extra accidents are rejected by the full-lane estimate
-    filter."""
+    ``packed_prefix_cols`` under ``a_prefix``/``b_prefix`` names. Short
+    prefixes collide at 2^-_PACK_BITS per lane, so the gate accepts a
+    superset of what full-lane equality would; the full-lane estimate
+    filter rejects the extras."""
     p = min(_PREFIX_LANES, cfg.num_perm)
     lpw = _LANES_PER_WORD
     total = None
@@ -107,9 +122,30 @@ def packed_prefix_frac(cfg: DedupConfig, a_prefix: str, b_prefix: str):
     return total / F.lit(float(p))
 
 
-def _est_filter_arrow(keep_cols: list[str], threshold: float, num_perm: int):
-    """mapInArrow kernel: lane-match estimate + threshold filter in ONE
-    Python pass over raw Arrow record batches. Two lessons baked in:
+def prefix_gate_mask(A: np.ndarray, B: np.ndarray, cfg: DedupConfig):
+    """The prefix gate on (n, num_perm) ``mh16`` lane-prefix arrays: the
+    numpy twin of ``packed_prefix_frac(...) >= prefix_gate_floor(cfg)``.
+    ``mh16`` is ``lane >> 48``, so its top ``_PACK_BITS`` bits are the
+    bits packed_prefix_cols packs, and count / p is the same float
+    division Spark does."""
+    p = min(_PREFIX_LANES, cfg.num_perm)
+    shift = 16 - _PACK_BITS
+    same = (A[:, :p] >> shift) == (B[:, :p] >> shift)
+    return same.sum(axis=1) / float(p) >= prefix_gate_floor(cfg)
+
+
+def _est_filter_arrow(keep_cols: list[str], cfg: DedupConfig):
+    """mapInArrow kernel: the MinHash prefix gate, the lane-match
+    estimate and the estimate threshold in ONE Python pass over raw
+    Arrow record batches.
+
+    The gate is the bucket join's predicate evaluated on the ``mh16``
+    arrays already here (prefix_gate_mask). Pairs from
+    unified_candidates have passed it already (a no-op on them); any
+    other candidate source gets the same gate, once per batch, with no
+    second predicate.
+
+    Two lessons baked in:
     (1) a pandas-UDF column consumed by both a Filter and the output
     Project is extracted into TWO ArrowEvalPython nodes by Catalyst —
     every pair paid the Arrow roundtrip twice; fusing compute and filter
@@ -118,11 +154,14 @@ def _est_filter_arrow(keep_cols: list[str], threshold: float, num_perm: int):
     small numpy arrays — np.vstack over it is one alloc+copy per ROW,
     and that allocator churn is what inflated this stage's CPU 3.5x at
     8 workers on one memory controller (BASELINE.md round 3). Arrow's
-    list<int32> is already ONE contiguous values buffer: flatten() +
-    reshape is a view, the (A == B) compare is the only real work, and
-    the filtered batch is rebuilt with Arrow take/filter — no pandas, no
+    list<int16> is already ONE contiguous values buffer: flatten() +
+    reshape is a view, the (A == B) compares are the only real work, and
+    the filtered batch is rebuilt with Arrow filter — no pandas, no
     per-row allocation."""
     import pyarrow as pa
+
+    num_perm = cfg.num_perm
+    est_floor = cfg.jaccard_threshold - ESTIMATE_MARGIN
 
     def batches(it):
         for rb in it:
@@ -138,7 +177,7 @@ def _est_filter_arrow(keep_cols: list[str], threshold: float, num_perm: int):
                 zero_copy_only=False
             ).reshape(n, num_perm)
             est = (A == B).mean(axis=1)
-            m = est >= threshold
+            m = prefix_gate_mask(A, B, cfg) & (est >= est_floor)
             mask = pa.array(m)
             cols = [
                 rb.column(rb.schema.get_field_index(c)).filter(mask)
@@ -159,94 +198,44 @@ def _spread_by_b(pairs: DataFrame) -> DataFrame:
 
 
 def estimate_filter_candidates(
-    candidates: DataFrame, signatures: DataFrame, cfg: DedupConfig,
-    margin: float = 0.15, pre_gated: bool = False,
-    materialize: bool = False,
+    candidates: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """→ (a, b[, src], est): join MinHash signatures onto DISTINCT
-    candidate pairs, keep pairs with lane-match estimate ≥ threshold -
-    margin, carrying ``est`` forward for the verify triage.
+    """→ (a, b[, src], est): join ``mh16`` lane prefixes onto DISTINCT
+    candidate pairs, keep pairs that pass the MinHash prefix gate and
+    whose lane-match estimate is ≥ threshold − ESTIMATE_MARGIN, carrying
+    ``est`` forward for the verify triage (both in _est_filter_arrow).
 
     Order matters at scale: pair-dedup happens BEFORE this join — (a,b)
     rows are 16 bytes, so deduping the raw band stream first is the
     cheapest shuffle in the pipeline, and the signature arrays are then
     shipped only once per distinct pair. (With 46M raw pairs at 80k
     files, est-before-dedup shuffles ~92GB of arrays; dedup-first cuts
-    that ~300x.) Lanes are truncated to int16 before the join — equality
-    of 16-bit lane prefixes falsely collides at 2^-16 per non-matching
-    lane, inflating est by ≤ (1-J)·2^-16 ≈ 1.5e-5, invisible next to the
-    ±margin band, while a truly matching lane always matches its prefix
-    (the cascade only ADDS candidates; exact verify re-checks them all)
-    — quartering shuffle and Arrow bytes vs full lanes; the lane-match
-    kernel itself is a vectorized Arrow map (see _est_filter_arrow)."""
-    if "mh16" in signatures.columns:
-        # precomputed vectorized in the signature UDF (signatures.py)
-        sig = signatures.select("file_id", "mh16")
-        if materialize:
-            # Narrow side-checkpoint: checkpoint scans cannot
-            # column-prune, so BOTH join sides below would otherwise
-            # re-read the full wide signature checkpoint (minhash arrays
-            # included) to project 2 columns — ~3.7 GB per 1M files vs
-            # 1.85 (one build scan) + 2×0.55 here. Row format on
-            # purpose: a columnar cache was measured SLOWER for
-            # checkpoint-fed consumers (BASELINE.md round-3 A/B).
-            sig = sig.localCheckpoint()
-    else:
-        # fallback for signature relations built elsewhere (e.g. ensemble
-        # concat): top 16 bits per lane, fits smallint under ANSI casting
-        sig = signatures.select(
-            "file_id",
-            F.expr(
-                "transform(minhash, x -> cast(shiftright(x, 48) as smallint))"
-            ).alias("mh16"),
-        )
+    that ~300x.) ``mh16`` holds 16-bit lane prefixes (signatures.py):
+    equality of 16-bit prefixes falsely collides at 2^-16 per
+    non-matching lane, inflating est by ≤ (1-J)·2^-16 ≈ 1.5e-5,
+    invisible next to the ±margin band, while a truly matching lane
+    always matches its prefix (the cascade only ADDS candidates; exact
+    verify re-checks them all) — quartering shuffle and Arrow bytes vs
+    full lanes."""
+    # Narrow side-checkpoint: checkpoint scans cannot column-prune, so
+    # BOTH join sides below would otherwise re-read the full wide
+    # signature checkpoint (minhash arrays included) to project 2
+    # columns — ~3.7 GB per 1M files vs 1.85 (one build scan) + 2×0.55
+    # here. Row format on purpose: a columnar cache was measured SLOWER
+    # for checkpoint-fed consumers (BASELINE.md round-3 A/B).
+    sig = signatures.select("file_id", "mh16").localCheckpoint()
     sa = sig.select(F.col("file_id").alias("a"), F.col("mh16").alias("mh_a"))
     sb = sig.select(F.col("file_id").alias("b"), F.col("mh16").alias("mh_b"))
-    # JVM prefix gate before any Python: on vocabulary-noisy corpora
-    # >99% of band-collision pairs are low-similarity accidents; a
-    # 16-lane prefix match at (t - 2·margin) rejects them inside the
-    # join stage (interpreted HOF, but on 16 lanes, not 128), so the
-    # Arrow pipe and the pandas kernel see plausible pairs only.
-    # False-reject odds for a true pair at s = t: P(Binom(16, t)/16 <
-    # t - 2·margin) ≈ 2e-3 at t=0.7 — under the recall gate, and such
-    # pairs are usually re-found via the SimHash space or transitivity.
-    # With num_perm < 16 lanes the slice yields fewer elements; dividing
-    # by 16 would cap prefix_frac at num_perm/16 and could silently
-    # reject every pair. Degrade to a full-signature check instead.
-    # ``pre_gated``: the caller already ran the packed in-join prefix
-    # gate (unified_candidates) — skip the redundant HOF pass here.
     joined = _spread_by_b(candidates).join(sa, "a").join(sb, "b")
-    if not pre_gated:
-        p = min(_PREFIX_LANES, cfg.num_perm)
-        prefix_frac = (
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        F.slice("mh_a", 1, p),
-                        F.slice("mh_b", 1, p),
-                        lambda x, y: x == y,
-                    ),
-                    lambda v: v,
-                )
-            )
-            / F.lit(float(p))
-        )
-        joined = joined.where(
-            prefix_frac >= cfg.jaccard_threshold - 2 * margin
-        )
     keep_cols = [c for c in joined.columns if c not in ("mh_a", "mh_b")]
     schema = T.StructType(
         [f for f in joined.schema.fields if f.name in keep_cols]
         + [T.StructField("est", T.DoubleType())]
     )
-    return joined.mapInArrow(
-        _est_filter_arrow(keep_cols, cfg.jaccard_threshold - margin,
-                          cfg.num_perm),
-        schema,
-    )
+    return joined.mapInArrow(_est_filter_arrow(keep_cols, cfg), schema)
 
 
-def _verify_map(keep_cols: list[str], cfg: DedupConfig, with_lcs: bool):
+def _verify_map(keep_cols: list[str], cfg: DedupConfig):
     """mapInPandas kernel for verify_pairs: exact Jaccard + CONDITIONAL
     LCS + verdict in one Python pass.
 
@@ -272,10 +261,7 @@ def _verify_map(keep_cols: list[str], cfg: DedupConfig, with_lcs: bool):
     # element cap bounds executor-thread memory (~32 MB of u64 at 4M
     # elements); on overflow the cache resets rather than evicts — a
     # coarse epoch reset keeps the hit rate with zero bookkeeping.
-    # TWINSPECT_VERIFY_NO_CACHE=1 disables it (the bench.py
-    # --verifybench A/B control; no semantic difference either way).
     _CACHE_MAX_ELEMS = 4_000_000
-    _no_cache = os.environ.get("TWINSPECT_VERIFY_NO_CACHE") == "1"
 
     def batches(it):
         cache: dict = {}
@@ -283,8 +269,6 @@ def _verify_map(keep_cols: list[str], cfg: DedupConfig, with_lcs: bool):
 
         def hashes_of(doc_id, text):
             nonlocal cached_elems
-            if _no_cache:
-                return H.shingle_hashes(text, k)
             h = cache.get(doc_id)
             if h is None:
                 h = H.shingle_hashes(text, k)
@@ -317,14 +301,13 @@ def _verify_map(keep_cols: list[str], cfg: DedupConfig, with_lcs: bool):
             # float NaN, pd.NA to a true SQL NULL — the contract is NULL
             lcs_vals: list[float | None] = [None] * n
             border = (jac >= floor) & (jac < t)
-            if with_lcs:
-                for i in np.flatnonzero(border):
-                    x, y = ca[i], cb[i]
-                    if not x or not y:
-                        lcs_vals[i] = 0.0
-                        continue
-                    short, long_ = (x, y) if len(x) <= len(y) else (y, x)
-                    lcs_vals[i] = _lcs_len(short, long_) / float(len(short))
+            for i in np.flatnonzero(border):
+                x, y = ca[i], cb[i]
+                if not x or not y:
+                    lcs_vals[i] = 0.0
+                    continue
+                short, long_ = (x, y) if len(x) <= len(y) else (y, x)
+                lcs_vals[i] = _lcs_len(short, long_) / float(len(short))
             lcs = np.array(
                 [v if v is not None else np.nan for v in lcs_vals]
             )
@@ -400,8 +383,6 @@ def verify_pairs(
     candidates: DataFrame,
     ingested: DataFrame,
     cfg: DedupConfig,
-    with_lcs: bool = True,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """candidates(a, b[, src]) → pairs(a, b, jaccard, lcs_score, verified).
 
@@ -421,13 +402,7 @@ def verify_pairs(
     For triage-accepted pairs ``jaccard`` holds the ESTIMATE and
     ``method`` = 'minhash_est'; exact-verified pairs carry
     ``method`` = 'exact'.
-
-    Passing ``signatures`` applies the estimate filter+triage here for
-    callers that didn't pre-filter.
     """
-    if signatures is not None and "est" not in candidates.columns:
-        candidates = estimate_filter_candidates(candidates, signatures, cfg)
-
     sure = None
     if "est" in candidates.columns:
         sigma = (
@@ -475,6 +450,6 @@ def verify_pairs(
         ]
     )
     exact = paired.mapInPandas(
-        _verify_map(["a", "b"], cfg, with_lcs), schema
+        _verify_map(["a", "b"], cfg), schema
     )
     return exact if sure is None else exact.unionByName(sure)

@@ -108,7 +108,7 @@ def stage_graph(
     # candbench) and 81.9 s uncompressed (spills). The cache's
     # column-pruning upside for the estimate stage's narrow joins is
     # captured instead by a narrow side-checkpoint inside
-    # estimate_filter_candidates(materialize=True).
+    # estimate_filter_candidates.
     signatures = cut("signatures", lambda: compute_signatures(reps, cfg))
     mark("signatures")
 
@@ -120,16 +120,14 @@ def stage_graph(
         # MinHash-estimate filter joins signature arrays onto distinct
         # pairs (see estimate_filter_candidates for the cost asymmetry),
         # so only est-filtered survivors are materialized. The packed
-        # MinHash prefix gate runs inside the bucket self-join, so the
-        # estimate filter skips its redundant HOF gate (pre_gated).
+        # MinHash prefix gate runs inside the bucket self-join; the
+        # estimate kernel re-applies it, a no-op on these pairs.
         deduped = unified_candidates(signatures, cfg)
         # the capped bucket table materializes eagerly inside
         # unified_candidates — attribute it, or it vanishes from the
         # stage table while still inflating wall (round-3 lesson)
         mark("buckets")
-        return estimate_filter_candidates(
-            deduped, signatures, cfg, pre_gated=True, materialize=True
-        )
+        return estimate_filter_candidates(deduped, signatures, cfg)
 
     candidates = cut("candidates", candidates)
     mark("candidates")

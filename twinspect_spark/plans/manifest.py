@@ -19,6 +19,17 @@ module is the Spark-native equivalent:
   a stage-level metrics row to ``<root>/<key>/_metrics/`` — the
   north-rule lineage/metrics tables.
 
+Every stage, ``signatures`` included, is plain parquet read back with
+``spark.read.parquet``: no bucketed layout and no catalog table. A
+hash-bucketed signatures layout was dropped because no plan used it:
+the bucket explode re-shuffles on the packed bucket key right after its
+scan, and the planner turned bucketing off for the two other readers
+(the narrow ``(file_id, mh16)`` side-checkpoint and the CC vertices).
+Checkpoints written in that layout still read, as plain parquet. The
+durable cut runs the operator calls of ``run_dedup`` unchanged,
+including its one MinHash prefix gate (in the bucket join, re-applied
+by the estimate kernel).
+
 Paths are plain directories (local FS in tests; object-store/HDFS URIs
 work identically since all IO goes through Spark writers except the tiny
 JSON manifest, which production would place on a shared store).
@@ -28,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
 from typing import Callable
@@ -40,28 +50,6 @@ from twinspect_spark.config import DedupConfig
 from twinspect_spark.pipeline import stage_graph
 
 STAGES = ["ingested", "signatures", "candidates", "pairs", "clusters"]
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API, so bucketed
-    stage overwrites work on any checkpoint root Spark can write to
-    (local FS, HDFS, object stores) — not just posix paths."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-# Stages checkpointed as hash-BUCKETED external tables instead of plain
-# parquet (key, n_buckets). The signature store is re-joined on file_id
-# by every resumed consumer (estimate filter a-side + b-side, cluster
-# expansion) — bucketing it by file_id lets those scans come up already
-# hash-partitioned, dropping the signature-side Exchange from each join
-# (sources/tables.py write_bucketed documents the layout; on Iceberg
-# this is the bucket(N, file_id) hidden-partition transform).
-# n_buckets MUST equal spark.sql.shuffle.partitions (32, session.py):
-# mismatched partitioning would make Catalyst re-shuffle BOTH sides.
-BUCKETED_STAGES: dict[str, tuple[str, int]] = {"signatures": ("file_id", 32)}
 
 
 class StageManifest:
@@ -87,44 +75,7 @@ class StageManifest:
     def is_complete(self, stage: str) -> bool:
         return os.path.exists(self._done_path(stage))
 
-    def _table_name(self, stage: str) -> str:
-        # base-path hash: two manifests with the same config under
-        # DIFFERENT roots (common in tests) must not share a catalog
-        # entry — the table name is just a session-local handle over
-        # LOCATION, but a name collision would re-point a held handle
-        import hashlib
-
-        h = hashlib.sha256(self.base.encode()).hexdigest()[:8]
-        return re.sub(r"[^0-9A-Za-z_]", "_", f"ckpt_{self.key}_{h}_{stage}")
-
-    def _register_bucketed(self, stage: str, key: str, n: int) -> DataFrame:
-        """(Re-)register the bucketed external table for ``stage`` in
-        THIS session's catalog and return it. A resumed run is a fresh
-        JVM with an empty in-memory catalog — the bucket layout lives
-        in the table definition, so it must be re-declared over the
-        existing files for Catalyst to plan bucketed scans again."""
-        tbl = self._table_name(stage)
-        path = self.stage_path(stage)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in self.spark.read.parquet(path).schema.fields
-        )
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({ddl}) USING PARQUET"
-            f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS"
-            f" LOCATION '{path}'"
-        )
-        return self.spark.table(tbl)
-
     def read(self, stage: str) -> DataFrame:
-        done = self._done_path(stage)
-        if os.path.exists(done):
-            with open(done) as f:
-                meta = json.load(f)
-            b = meta.get("bucketed")
-            if b:
-                return self._register_bucketed(stage, b["key"], b["n"])
         return self.spark.read.parquet(self.stage_path(stage))
 
     def invalidate(self, stage: str) -> None:
@@ -141,34 +92,10 @@ class StageManifest:
         (downstream plans read the files, not the upstream lineage)."""
         t0 = time.perf_counter()
         path = self.stage_path(stage)
-        bucketed = BUCKETED_STAGES.get(stage)
-        if bucketed and bucketed[0] in df.columns:
-            key, n = bucketed
-            tbl = self._table_name(stage)
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            # saveAsTable(bucketBy) refuses to overwrite an existing
-            # LOCATION dir, so clear it through the Hadoop FileSystem
-            # API — resolves local paths, HDFS and object-store URIs
-            # alike, matching the module's checkpoint-root contract
-            _fs_delete(self.spark, path)
-            (
-                df.write.format("parquet")
-                .mode("overwrite")
-                .bucketBy(n, key)
-                .sortBy(key)
-                .option("path", path)
-                .saveAsTable(tbl)
-            )
-        else:
-            bucketed = None
-            df.write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").parquet(path)
         wall_s = round(time.perf_counter() - t0, 3)
 
-        out = (
-            self.spark.table(self._table_name(stage))
-            if bucketed
-            else self.spark.read.parquet(path)
-        )
+        out = self.spark.read.parquet(path)
         lineage = (
             out.groupBy(F.col("_metadata.file_path").alias("part_file"))
             .agg(
@@ -216,11 +143,6 @@ class StageManifest:
                     "rows": int(stats["rows"] or 0),
                     "wall_s": wall_s,
                     "config": self.cfg.fingerprint(),
-                    "bucketed": (
-                        {"key": bucketed[0], "n": bucketed[1]}
-                        if bucketed
-                        else None
-                    ),
                 },
                 f,
             )

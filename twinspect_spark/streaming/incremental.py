@@ -656,6 +656,8 @@ def process_batch(
         if fetched_old is None
         else fetched_old.unionByName(new_state)
     )
+    # the estimate kernel applies the batch path's MinHash prefix gate
+    # (these pairs skip the bucket join, where batch pairs first meet it)
     cand = estimate_filter_candidates(cand, lookup, cfg)
     pairs = verify_pairs(cand, lookup, cfg)
     edges_new = (
