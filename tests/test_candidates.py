@@ -1,7 +1,7 @@
 """Candidate generation's decisions: the packed bucket-key limit checked
-at config construction, and the one MinHash prefix gate — the same
-predicate in the bucket join (Spark, packed_prefix_frac) and in the
-estimate kernel (numpy, prefix_gate_mask)."""
+at config construction, and the one MinHash prefix gate, evaluated in
+the bucket join (Spark, packed_prefix_frac) and checked here against a
+numpy reference of its predicate."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from twinspect_spark.operators.verify import (
     packed_prefix_cols,
     packed_prefix_frac,
     prefix_gate_floor,
-    prefix_gate_mask,
 )
 
 
@@ -28,6 +27,16 @@ def test_packed_key_limit_fails_at_construction():
 def _mh16(lanes: np.ndarray) -> np.ndarray:
     # as signatures.py derives mh16 from the 64-bit lanes
     return (lanes >> np.uint64(48)).astype(np.int16)
+
+
+def _gate_ref(a: np.ndarray, b: np.ndarray, cfg: DedupConfig) -> np.ndarray:
+    """The prefix gate written out on (n, num_perm) uint64 lane rows: the
+    top 8 bits of the first min(16, num_perm) lanes agree on at least
+    t - 2 * margin of those lanes."""
+    p = min(16, cfg.num_perm)
+    same = (a[:, :p] >> np.uint64(56)) == (b[:, :p] >> np.uint64(56))
+    floor = cfg.jaccard_threshold - 2 * ESTIMATE_MARGIN
+    return same.sum(axis=1) / float(p) >= floor
 
 
 @st.composite
@@ -58,8 +67,8 @@ def _lane_pairs(draw):
 @given(case=_lane_pairs())
 @settings(max_examples=30, deadline=None)
 def test_one_gate_predicate(spark, case):
-    """The packed in-join gate evaluated in Spark and the estimate
-    kernel's gate on mh16 arrays decide every pair the same way."""
+    """The packed in-join gate evaluated in Spark decides every pair as
+    the numpy reference of its predicate does."""
     cfg, a, b = case
     rows = [
         (i, a[i].view(np.int64).tolist(), b[i].view(np.int64).tolist())
@@ -79,17 +88,16 @@ def test_one_gate_predicate(spark, case):
         .alias("ok"),
     ).collect()
     spark_gate = [r["ok"] for r in sorted(ok, key=lambda r: r["id"])]
-    kernel_gate = prefix_gate_mask(_mh16(a), _mh16(b), cfg).tolist()
-    assert spark_gate == kernel_gate
-    # row 0 matches on the top 8 bits only: both gates pass it, while
+    assert spark_gate == _gate_ref(a, b, cfg).tolist()
+    # row 0 matches on the top 8 bits only: the gate passes it, while
     # its 16-bit lane prefixes all differ
     assert spark_gate[0] and not (_mh16(a[0]) == _mh16(b[0])).any()
 
 
 def test_estimate_filter_drops_only_below_estimate_floor(spark):
-    """Over unified_candidates output the estimate filter's gate drops
-    nothing (those pairs passed it in the bucket join) and the estimate
-    threshold drops exactly the pairs with est < t - margin."""
+    """Every unified_candidates pair passed the prefix gate in the bucket
+    join, and the estimate filter drops exactly the pairs with est <
+    t - margin."""
     from twinspect_spark.corpus import generate_corpus
     from twinspect_spark.ingest import ingest_files
     from twinspect_spark.operators.buckets import unified_candidates
@@ -110,14 +118,14 @@ def test_estimate_filter_drops_only_below_estimate_floor(spark):
     }
 
     mh = {
-        r["file_id"]: np.array(r["mh16"], dtype=np.int16)
-        for r in sigs.select("file_id", "mh16").collect()
+        r["file_id"]: np.array(r["minhash"], dtype=np.int64).view(np.uint64)
+        for r in sigs.select("file_id", "minhash").collect()
     }
     pairs = [(r["a"], r["b"]) for r in cands.collect()]
     A = np.stack([mh[x] for x, _ in pairs])
     B = np.stack([mh[y] for _, y in pairs])
-    assert prefix_gate_mask(A, B, cfg).all()
-    est = (A == B).mean(axis=1)
+    assert _gate_ref(A, B, cfg).all()
+    est = (_mh16(A) == _mh16(B)).mean(axis=1)
     want = {
         p: e for p, e in zip(pairs, est)
         if e >= cfg.jaccard_threshold - ESTIMATE_MARGIN

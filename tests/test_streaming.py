@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.corpus import generate_corpus
@@ -214,32 +217,137 @@ def test_compaction_folds_remap_and_gcs(spark, corpus, batch_clusters, tmp_path_
 def test_incremental_candidates_plan_is_pruned_and_broadcast(
     spark, corpus, tmp_path_factory
 ):
-    """Scale contract of the incremental path: the stored bucket table is
+    """Scale contract of the streaming probe: the stored bucket rows are
     read with directory-partition pruning (PartitionFilters on bucket_pt)
     and joined via broadcast — the accumulated side must never be
-    shuffled, so per-batch cost tracks the batch, not the store."""
-    from twinspect_spark.operators.buckets import bucket_table
-    from twinspect_spark.streaming.incremental import (
-        STATE_COLS,
-        _incremental_candidates,
-    )
+    shuffled whole, so per-batch cost tracks the batch, not the store."""
+    from twinspect_spark.ingest import ingest_files
+    from twinspect_spark.operators.buckets import packed_bucket_table
+    from twinspect_spark.signatures import compute_signatures
+    from twinspect_spark.streaming.incremental import _bucket_pt, _probe_rows
 
     store = DedupStore(spark, str(tmp_path_factory.mktemp("store_plan")))
     chunks = _chunks(corpus)
     process_batch(spark, spark.createDataFrame(chunks[0]), store, CFG, batch_id=0)
-    ingested = spark.createDataFrame(chunks[1])
-    from twinspect_spark.ingest import ingest_files
-    from twinspect_spark.signatures import compute_signatures
-
-    ing = ingest_files(ingested, CFG)
+    ing = ingest_files(spark.createDataFrame(chunks[1]), CFG)
     sigs = compute_signatures(ing, CFG)
-    new_state = (
-        ing.select("file_id", "sha256", "size", "content_norm")
-        .join(sigs.select("file_id", "minhash", "mh16", "simhash"), "file_id")
-        .select(*STATE_COLS)
-    )
-    cand = _incremental_candidates(bucket_table(new_state, CFG), store, CFG)
-    plan = cand._jdf.queryExecution().toString()
+    bk_new = packed_bucket_table(sigs, CFG).withColumn("bucket_pt", _bucket_pt())
+    plan = _probe_rows(bk_new, store)._jdf.queryExecution().toString()
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("bucket_pt" in ln for ln in scan_lines), scan_lines
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+
+
+def _stream_clusters(spark, batches, cfg, root):
+    store = DedupStore(spark, root)
+    for i, chunk in enumerate(batches):
+        process_batch(spark, spark.createDataFrame(chunk), store, cfg, batch_id=i)
+    return {r["file_id"]: r["cluster_id"] for r in store.clusters().collect()}
+
+
+def _with_copies(files, copies):
+    """``files`` plus, per (row index, n) in ``copies``, n byte-identical
+    copies of that row under new repos."""
+    extra = [
+        {**files.iloc[i].to_dict(), "repo": f"copy{i}/r{k}"}
+        for i, n in copies for k in range(n)
+    ]
+    return pd.concat([files, pd.DataFrame(extra)], ignore_index=True)
+
+
+def test_exact_copies_past_the_cap_match_batch(spark, tmp_path_factory):
+    """30 copies of one file fill its buckets past max_band_bucket. The
+    batch pipeline keeps one representative; the stream must collapse
+    the copies the same way, within a batch and against stored files,
+    and give run_dedup's clusters exactly."""
+    cfg = DedupConfig(max_band_bucket=20, chain_bucket_size=4)
+    planted = generate_corpus(
+        n_clusters=5, transforms_per_original=3, n_distractors=6,
+        n_exact_dups=2, seed=3,
+    ).files
+    files = _with_copies(planted, [(0, 30)]).sample(
+        frac=1, random_state=1
+    ).reset_index(drop=True)
+    want = {
+        r["file_id"]: r["cluster_id"]
+        for r in run_dedup(spark.createDataFrame(files), cfg).clusters.collect()
+    }
+    got = _stream_clusters(
+        spark, [files.iloc[i::3] for i in range(3)], cfg,
+        str(tmp_path_factory.mktemp("store_copies")),
+    )
+    assert got == want
+
+
+@st.composite
+def _stream_case(draw):
+    """(cfg, files, batches): a small planted corpus plus exact-copy
+    groups, split into 3 batches in a random order, with cluster sizes
+    around chain_bucket_size and max_band_bucket."""
+    chain = draw(st.integers(2, 5))
+    cap = draw(st.integers(chain + 2, 12))
+    c = generate_corpus(
+        n_clusters=draw(st.integers(2, 4)),
+        transforms_per_original=draw(st.integers(1, 4)),
+        n_distractors=draw(st.integers(0, 4)),
+        n_exact_dups=draw(st.integers(0, 2)),
+        seed=draw(st.integers(0, 10_000)),
+    ).files
+    sizes = [chain - 1, chain, chain + 1, cap - 1, cap, cap + 1]
+    copies = draw(st.lists(
+        st.tuples(st.integers(0, len(c) - 1), st.sampled_from(sizes)),
+        max_size=2,
+    ))
+    files = _with_copies(c, copies)
+    order = draw(st.permutations(range(len(files))))
+    shuffled = files.iloc[list(order)].reset_index(drop=True)
+    cfg = DedupConfig(
+        jaccard_threshold=0.6, chain_bucket_size=chain, max_band_bucket=cap
+    )
+    return cfg, files, [shuffled.iloc[i::3] for i in range(3)]
+
+
+@given(case=_stream_case())
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_stream_clusters_contain_batch_clusters(spark, tmp_path, case):
+    """Stream candidates are a superset of run_dedup's, so every
+    run_dedup cluster lies inside one process_batch cluster."""
+    cfg, files, batches = case
+    want = run_dedup(spark.createDataFrame(files), cfg).clusters.collect()
+    got = _stream_clusters(
+        spark, batches, cfg, str(tmp_path / f"s{time.monotonic_ns()}")
+    )
+    assert set(got) == {r["file_id"] for r in want}
+    inside: dict[int, int] = {}
+    for r in want:
+        assert inside.setdefault(r["cluster_id"], got[r["file_id"]]) == (
+            got[r["file_id"]]
+        )
+
+
+def test_jobs_per_batch_are_constant(spark, tmp_path_factory):
+    """From the second batch on, every process_batch of an equal-sized
+    batch runs the same number of Spark jobs: no store read lists its
+    batch directories in a job or infers a schema in one, so the count
+    does not grow with the number of committed batches."""
+    files = generate_corpus(
+        n_clusters=24, transforms_per_original=3, n_distractors=24,
+        n_exact_dups=24, seed=9,
+    ).files.sample(frac=1, random_state=2).reset_index(drop=True)
+    store = DedupStore(spark, str(tmp_path_factory.mktemp("store_jobs")))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = []
+    try:
+        for i in range(6):
+            group = f"test_jobs_batch{i}_{time.monotonic_ns()}"
+            sc.setJobGroup(group, group)
+            process_batch(
+                spark, spark.createDataFrame(files.iloc[i::6]), store, CFG,
+                batch_id=i,
+            )
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+    finally:
+        sc.setJobGroup("", "")
+    assert len(set(jobs[1:])) == 1, jobs

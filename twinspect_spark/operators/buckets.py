@@ -16,7 +16,7 @@ latency that 4× the cores cannot shrink):
   self-join needs anyway — no second aggregation pass, no broadcast of
   a megarow sizes relation;
 * the (space, bucket_idx, bucket_key) triple is packed into ONE long
-  before that exchange (capped_bucket_table) — UnsafeRow spends an
+  before that exchange (packed_bucket_table) — UnsafeRow spends an
   8-byte slot per column, so the pack cuts 16 bytes/row off the
   byte-heaviest shuffle and makes every downstream hash/compare a
   single-long operation;
@@ -27,9 +27,8 @@ latency that 4× the cores cannot shrink):
   lane prefixes (operators/verify.packed_prefix_cols) — pure integer
   codegen, no interpreted HOFs, no signature join — so the pair stream
   entering the dedupe shuffle is already est-plausible. The estimate
-  filter then joins lane prefixes onto survivors only; its kernel
-  re-applies the same predicate on the same bits, a no-op on these
-  pairs (operators/verify.py: one gate, two sites).
+  filter then joins lane prefixes onto survivors only and applies no
+  gate of its own (operators/verify.py: one gate, one site).
 
 The SimHash Hamming post-filter (bit_count ≤ d) applies only to
 chunk-space pairs; simhash codes ride along as join payload (16 bytes)
@@ -39,6 +38,7 @@ so no extra join is needed to fetch them.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from twinspect_spark.config import DedupConfig
@@ -89,42 +89,50 @@ def bucket_table(
     return b.select(*names, "e.space", "e.bucket_idx", "e.bucket_key")
 
 
-def capped_bucket_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Substage 1 of unified_candidates: bucket rows with per-bucket
-    counts from ONE count-window pass on the self-join's own exchange,
-    singleton and hot (> max_band_bucket) buckets dropped, result
-    materialized (eager localCheckpoint) so both join sides and the
-    chain window read a materialized relation with accurate AQE stats
-    and no subtree re-execution. Exposed separately so the
-    scaling-evidence bench (bench.py --candbench) can meter this
-    exchange apart from the pair join."""
-    from pyspark.sql import Window as W
-
+def packed_bucket_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """signatures → (file_id, simhash, mp0..mpK, bucket): bucket_table
+    rows with packed prefix words, and the (space, bucket_idx,
+    bucket_key) triple packed into ONE long ``bucket``: bits 63..62
+    space, 61..56 bucket_idx (DedupConfig caps bands and simhash_chunks
+    at 64), 55..0 the low 56 bits of the key. These rows feed the
+    byte-heaviest shuffle in the pipeline and UnsafeRow spends an 8-byte
+    slot per column — packing drops 16 bytes/row. Truncating the 64-bit
+    band hash to 56 bits can only MERGE buckets (a superset of candidate
+    pairs, cleaned by the gates/verify downstream) — recall is preserved
+    by construction; the collision rate at 2^56 per band is negligible.
+    The streaming store keeps exactly these rows per file."""
     b = bucket_table(signatures, cfg, with_prefix=True)
-    # pack (space, bucket_idx, bucket_key) into ONE long before the
-    # exchange: bits 63..62 space, 61..56 bucket_idx (DedupConfig caps
-    # bands and simhash_chunks at 64), 55..0 the low 56 bits of the
-    # key. This is the byte-heaviest shuffle in the pipeline and
-    # UnsafeRow spends an 8-byte slot per column — packing drops 16
-    # bytes/row. Truncating the 64-bit band hash to 56 bits
-    # can only MERGE buckets (a superset of candidate pairs, cleaned by
-    # the gates/verify downstream) — recall is preserved by
-    # construction; the collision rate at 2^56 per band is negligible.
     packed = (
         F.shiftleft(F.col("space").cast("long"), 62)
         .bitwiseOR(F.shiftleft(F.col("bucket_idx").cast("long"), 56))
         .bitwiseOR(F.col("bucket_key").bitwiseAND(F.lit((1 << 56) - 1)))
     )
-    b = b.withColumn("bucket", packed).drop(
+    return b.withColumn("bucket", packed).drop(
         "space", "bucket_idx", "bucket_key"
     )
+
+
+def cap_buckets(rows: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Packed bucket rows → + per-bucket ``count`` from ONE count-window
+    pass on the self-join's own exchange, singleton and hot (>
+    max_band_bucket) buckets dropped, result materialized (eager
+    localCheckpoint) so both join sides and the chain window of
+    bucket_pairs read a materialized relation with accurate AQE stats
+    and no subtree re-execution."""
     return (
-        b.withColumn("count", F.count("*").over(W.partitionBy("bucket")))
+        rows.withColumn("count", F.count("*").over(W.partitionBy("bucket")))
         .where(
             (F.col("count") > 1) & (F.col("count") <= cfg.max_band_bucket)
         )
         .localCheckpoint()
     )
+
+
+def capped_bucket_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Substage 1 of unified_candidates: packed bucket rows, capped.
+    Exposed separately so the scaling-evidence bench (bench.py
+    --candbench) can meter this exchange apart from the pair join."""
+    return cap_buckets(packed_bucket_table(signatures, cfg), cfg)
 
 
 def unified_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -156,9 +164,9 @@ def bucket_pairs(kept: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Substage 2 of unified_candidates: self-join small buckets
     (all-pairs) + spanning-chain big buckets, in-join Hamming and packed
     prefix gates, then the SO3 pair dedupe. See unified_candidates for
-    semantics."""
-    from pyspark.sql import Window as W
-
+    semantics. ``kept`` is cap_buckets output; the streaming probe
+    (streaming/incremental.py) passes stored ∪ new rows of the buckets a
+    micro-batch touches, the batch pipeline every bucket row."""
     keys = ["bucket"]  # packed (space, bucket_idx, bucket_key) long
     payload = [c for c in kept.columns if c not in (*keys, "count")]
 

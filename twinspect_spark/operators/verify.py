@@ -16,13 +16,13 @@ UDF cost model (SURVEY.md §4):
 Stages 3-4 see only candidate pairs (tiny vs n²); content is joined in at
 the last moment so it never rides through the band shuffles.
 
-There is ONE MinHash prefix gate, one predicate: the top ``_PACK_BITS``
+There is ONE MinHash prefix gate, at one site: the top ``_PACK_BITS``
 bits of the first min(16, num_perm) lanes agree on at least
-``prefix_gate_floor(cfg)`` of those lanes. It runs inside the bucket
+``prefix_gate_floor(cfg)`` of those lanes, evaluated inside the bucket
 self-join on packed columns (packed_prefix_cols / packed_prefix_frac,
-operators/buckets.py) and is re-applied, on the same bits, by the
-estimate kernel (_est_filter_arrow) — a no-op on pairs from the bucket
-join, the whole gate for any other candidate source (streaming).
+operators/buckets.bucket_pairs). Every candidate source — the batch
+pipeline and the streaming probe alike — is that join, so the estimate
+kernel (_est_filter_arrow) applies only the estimate threshold.
 
 Partitioning rule for the two Python pair kernels (stage 2's mapInArrow,
 stages 3-4's mapInPandas): their pair input is hash-repartitioned by ``b``
@@ -71,9 +71,8 @@ ESTIMATE_MARGIN = 0.15
 
 def prefix_gate_floor(cfg: DedupConfig) -> float:
     """Least fraction of matching packed prefix lanes a candidate pair
-    needs to pass the MinHash prefix gate, t − 2·margin. Both gate sites
-    (the bucket join, buckets.bucket_pairs, and the estimate kernel,
-    _est_filter_arrow) compare against this one value."""
+    needs to pass the MinHash prefix gate, t − 2·margin, compared in the
+    bucket join (buckets.bucket_pairs)."""
     return cfg.jaccard_threshold - 2 * ESTIMATE_MARGIN
 
 
@@ -122,28 +121,10 @@ def packed_prefix_frac(cfg: DedupConfig, a_prefix: str, b_prefix: str):
     return total / F.lit(float(p))
 
 
-def prefix_gate_mask(A: np.ndarray, B: np.ndarray, cfg: DedupConfig):
-    """The prefix gate on (n, num_perm) ``mh16`` lane-prefix arrays: the
-    numpy twin of ``packed_prefix_frac(...) >= prefix_gate_floor(cfg)``.
-    ``mh16`` is ``lane >> 48``, so its top ``_PACK_BITS`` bits are the
-    bits packed_prefix_cols packs, and count / p is the same float
-    division Spark does."""
-    p = min(_PREFIX_LANES, cfg.num_perm)
-    shift = 16 - _PACK_BITS
-    same = (A[:, :p] >> shift) == (B[:, :p] >> shift)
-    return same.sum(axis=1) / float(p) >= prefix_gate_floor(cfg)
-
-
 def _est_filter_arrow(keep_cols: list[str], cfg: DedupConfig):
-    """mapInArrow kernel: the MinHash prefix gate, the lane-match
-    estimate and the estimate threshold in ONE Python pass over raw
-    Arrow record batches.
-
-    The gate is the bucket join's predicate evaluated on the ``mh16``
-    arrays already here (prefix_gate_mask). Pairs from
-    unified_candidates have passed it already (a no-op on them); any
-    other candidate source gets the same gate, once per batch, with no
-    second predicate.
+    """mapInArrow kernel: the lane-match estimate and the estimate
+    threshold in ONE Python pass over raw Arrow record batches. Its
+    pairs come from the bucket join, which applied the prefix gate.
 
     Two lessons baked in:
     (1) a pandas-UDF column consumed by both a Filter and the output
@@ -177,7 +158,7 @@ def _est_filter_arrow(keep_cols: list[str], cfg: DedupConfig):
                 zero_copy_only=False
             ).reshape(n, num_perm)
             est = (A == B).mean(axis=1)
-            m = prefix_gate_mask(A, B, cfg) & (est >= est_floor)
+            m = est >= est_floor
             mask = pa.array(m)
             cols = [
                 rb.column(rb.schema.get_field_index(c)).filter(mask)
@@ -201,9 +182,10 @@ def estimate_filter_candidates(
     candidates: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """→ (a, b[, src], est): join ``mh16`` lane prefixes onto DISTINCT
-    candidate pairs, keep pairs that pass the MinHash prefix gate and
-    whose lane-match estimate is ≥ threshold − ESTIMATE_MARGIN, carrying
-    ``est`` forward for the verify triage (both in _est_filter_arrow).
+    candidate pairs from buckets.bucket_pairs (which applied the prefix
+    gate), keep pairs whose lane-match estimate is ≥ threshold −
+    ESTIMATE_MARGIN, carrying ``est`` forward for the verify triage
+    (_est_filter_arrow).
 
     Order matters at scale: pair-dedup happens BEFORE this join — (a,b)
     rows are 16 bytes, so deduping the raw band stream first is the

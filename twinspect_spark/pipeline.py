@@ -120,8 +120,8 @@ def stage_graph(
         # MinHash-estimate filter joins signature arrays onto distinct
         # pairs (see estimate_filter_candidates for the cost asymmetry),
         # so only est-filtered survivors are materialized. The packed
-        # MinHash prefix gate runs inside the bucket self-join; the
-        # estimate kernel re-applies it, a no-op on these pairs.
+        # MinHash prefix gate runs inside the bucket self-join, its one
+        # site.
         deduped = unified_candidates(signatures, cfg)
         # the capped bucket table materializes eagerly inside
         # unified_candidates — attribute it, or it vanishes from the

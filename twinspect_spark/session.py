@@ -136,6 +136,16 @@ def get_spark(
         # ~238 per stream batch. With 1000 entries the warm run_dedup
         # and resume passes compile 0 classes, a stream batch 0-10.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # A parquet read lists a directory's subdirectories in a Spark
+        # job once there are more than this many (default 32). Each
+        # batch dir of the streaming stores holds 64 partition dirs
+        # (streaming/incremental.py), so every store read launched one
+        # listing job per committed batch: jobs per process_batch rose
+        # by 3 a batch (43, 75, 78, ..., 87 over six 358-file batches on
+        # 4 vCPUs). Driver-side listing of a few thousand dirs is cheaper
+        # than a job; the store layout keeps its 64-way pruning.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -9,13 +9,15 @@ recomputing — or even shuffling — the world.
 State layout (plain parquet; the directory partitioning is the poor
 man's Iceberg bucketing — the Iceberg migration only swaps the writer):
 
-  state/batch_id=<id>/id_pt=<p>/      file rows (STATE_COLS), p =
-                                      pmod(xxhash64(file_id), ID_PARTS)
-  buckets/batch_id=<id>/bucket_pt=<p>/ the UNIFIED bucket table
-                                      (operators/buckets.bucket_table:
-                                      LSH bands + SimHash chunks in one
-                                      keyspace), p = pmod(xxhash64(space,
-                                      bucket_idx, bucket_key), BUCKET_PARTS)
+  state/batch_id=<id>/id_pt=<p>/      one row (STATE_COLS) per distinct
+                                      content: exact copies get none,
+                                      p = pmod(xxhash64(file_id), ID_PARTS)
+  buckets/batch_id=<id>/bucket_pt=<p>/ the batch pipeline's packed bucket
+                                      rows (operators/buckets.
+                                      packed_bucket_table: file_id,
+                                      simhash, mp0.., bucket), one per
+                                      (file, band or chunk), p =
+                                      pmod(xxhash64(bucket), BUCKET_PARTS)
   edges/batch_id=<id>/                verified pair edges
   clusters/batch_id=<id>/id_pt=<p>/   APPEND-ONLY arrival assignments:
                                       one immutable (file_id, cluster_id)
@@ -27,7 +29,7 @@ man's Iceberg bucketing — the Iceberg migration only swaps the writer):
                                       through it, never through row
                                       rewrites
   dead/batch_id=<id>/                 bucket tombstones: one row per
-                                      bucket key whose occupancy crossed
+                                      packed bucket whose occupancy crossed
                                       the frequency cap (written at
                                       bucket compaction; those keys are
                                       candidate-ineligible forever)
@@ -40,15 +42,26 @@ Why this scales where a naive design is O(|state|) per batch:
 
 1. Bucket rows are computed ONCE per file at arrival and appended —
    never recomputed from accumulated signatures.
-2. Candidate generation reads the stored bucket table pruned to the
+2. Candidate generation reads the stored bucket rows pruned to the
    directory partitions the new batch touches (PartitionFilters on
    bucket_pt + batch_id) and BROADCAST-semi-joins the new batch's bucket
    keys against it: the accumulated side is scanned (pruned), never
-   shuffled.
-3. Bucket-size frequency caps are aggregated over the COMBINED occupancy
-   of touched buckets only (matched stored rows + new rows), for BOTH
-   spaces — LSH bands and SimHash chunks — exactly as the batch
-   unified_candidates path caps both.
+   shuffled whole. Exact copies are collapsed before signatures, within
+   the batch and against the stored ``sha256`` (a column-pruned scan,
+   broadcast-semi-joined on the batch's hashes), so a copied file adds
+   no bucket row and cannot push a bucket past the cap.
+3. The candidate generator IS the batch one: the touched buckets'
+   stored rows ∪ the new rows go through operators/buckets.cap_buckets
+   (count over the COMBINED occupancy, cap) and bucket_pairs (all-pairs
+   or spanning chain, Hamming and packed prefix gates, pair dedupe).
+   The only stream-specific step keeps pairs with ≥ 1 new endpoint
+   (broadcast joins, no shuffle). Occupancy only grows, and two chain
+   neighbours in a bucket's final order are neighbours when the later
+   one arrives, so every pair run_dedup emits is emitted by some batch:
+   stream clusters equal run_dedup's or are coarser. (One gap: a
+   content's representative is its first-arriving copy here and its
+   min file_id in run_dedup, which can reorder chain members of equal
+   simhash.)
 4. Signature/content lookups for verification fetch only the candidate
    endpoints: pruned scan on id_pt + broadcast semi-join on file_id.
 5. Cluster assignments are append-only: each file's arrival row is
@@ -63,7 +76,8 @@ Why this scales where a naive design is O(|state|) per batch:
 6. The bucket store is LSM-compacted every ``compact_buckets_every``
    batches: member rows of buckets past the frequency cap — permanently
    candidate-ineligible, since occupancy only grows — are dropped and
-   replaced by one tombstone row per key, so the per-batch candidate
+   replaced by one tombstone row per packed bucket, which the probe
+   anti-joins before the cap, so the per-batch candidate
    probe scans LIVE bucket bytes, not the full append history (a hot
    boilerplate band otherwise accumulates dead members linearly
    forever and the probe re-reads them every batch).
@@ -80,8 +94,14 @@ files are invisible; the atomic _meta.json rename is the commit point.
 
 Contract: a file_id (xxhash64 of repo,path,commit) arrives at most once
 across the stream; re-sends of the same batch are deduplicated by the
-commit record, not by content. Micro-batches are assumed broadcast-sized
-(thousands of files); bulk backfills belong to the batch pipeline.
+commit record, not by content. A byte-identical copy of an earlier file
+is linked to it by an exact edge and clustered with it, never signed.
+Micro-batches are assumed broadcast-sized (thousands of files); bulk
+backfills belong to the batch pipeline.
+
+Every read names its store's schema, so a read infers none (schema
+inference is one Spark job per read); partition discovery lists the
+batch directories on the driver (session.get_spark).
 """
 
 from __future__ import annotations
@@ -93,22 +113,36 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from twinspect_spark.config import DedupConfig
 from twinspect_spark.ingest import FILES_SCHEMA, ingest_files
-from twinspect_spark.operators.buckets import bucket_table
+from twinspect_spark.operators.buckets import (
+    bucket_pairs,
+    cap_buckets,
+    packed_bucket_table,
+)
 from twinspect_spark.operators.cc import connected_components
+from twinspect_spark.operators.exact import collapse_exact_dups
 from twinspect_spark.operators.verify import (
     estimate_filter_candidates,
     verify_pairs,
 )
 from twinspect_spark.signatures import compute_signatures
 
-STATE_COLS = ["file_id", "sha256", "size", "content_norm", "minhash", "mh16", "simhash"]
-BUCKET_COLS = ["file_id", "simhash", "space", "bucket_idx", "bucket_key"]
+STATE_COLS = ["file_id", "sha256", "size", "content_norm", "mh16"]
 REMAP_SCHEMA = "old_label long, new_label long"
+# stored schemas, partition columns included; the bucket store's rows
+# are packed_bucket_table's, whose prefix-word count follows the config
+_SCHEMAS = {
+    "state": "file_id long, sha256 string, size long, content_norm string, "
+    "mh16 array<smallint>, batch_id int, id_pt int",
+    "clusters": "file_id long, cluster_id long, batch_id int, id_pt int",
+    "edges": "a long, b long, jaccard double, method string, batch_id int",
+    "dead": "bucket long, batch_id int",
+}
 
-STORE_FORMAT = 3
+STORE_FORMAT = 4
 META = "_meta.json"
 
 # Directory-partition fan-out of the two stores. At 10^12-file scale
@@ -126,9 +160,20 @@ def _id_pt() -> F.Column:
 
 
 def _bucket_pt() -> F.Column:
-    return F.pmod(
-        F.xxhash64("space", "bucket_idx", "bucket_key"), F.lit(BUCKET_PARTS)
-    ).cast("int")
+    return F.pmod(F.xxhash64("bucket"), F.lit(BUCKET_PARTS)).cast("int")
+
+
+def _pruned_semi(
+    stored: DataFrame, keys: DataFrame, key: str, pt: str
+) -> DataFrame:
+    """Rows of ``stored`` whose ``key`` is in ``keys``: a scan pruned to
+    the ``pt`` directory partitions the keys fall in (``keys`` carries
+    ``pt``), semi-joined on the broadcast keys — the cost tracks |keys|,
+    not the store."""
+    pts = [r[0] for r in keys.select(pt).distinct().collect()]
+    return stored.where(F.col(pt).isin(pts)).join(
+        F.broadcast(keys.select(key)), key, "left_semi"
+    )
 
 
 class DedupStore:
@@ -161,9 +206,6 @@ class DedupStore:
                     f"this build reads format {STORE_FORMAT} — rebuild the "
                     "store (no in-place migration)"
                 )
-            # additive field (round 5); absent in stores written before
-            # bucket compaction existed — semantics of 0 are identical
-            m.setdefault("bucket_base", 0)
             return m
         if any(_MARKER_RE.match(f) for f in os.listdir(self.root)):
             raise ValueError(
@@ -241,28 +283,35 @@ class DedupStore:
                 return True
         return False
 
-    def _read_committed(self, name: str) -> DataFrame | None:
-        """Read a batch-partitioned store, visible-committed rows only."""
+    def _read_committed(
+        self, name: str, schema: str | T.StructType | None = None
+    ) -> DataFrame | None:
+        """Read a batch-partitioned store, visible-committed rows only,
+        with its fixed schema (``_SCHEMAS[name]`` unless given)."""
         if not self._has(name):
             return None
-        df = self.spark.read.parquet(self._path(name))
+        df = self.spark.read.schema(schema or _SCHEMAS[name]).parquet(
+            self._path(name)
+        )
         return df.where(self.committed_pred())
 
     def state(self) -> DataFrame | None:
         df = self._read_committed("state")
         return None if df is None else df.select(*STATE_COLS)
 
-    def buckets(self) -> DataFrame | None:
-        """Committed LIVE bucket rows WITH the bucket_pt partition column
-        (the caller prunes on it before any join). Dirs below
-        ``bucket_base`` were folded by ``compact_buckets`` and are
-        invisible; rows of tombstoned (over-cap) buckets are dropped at
-        compaction, so probe bytes track live buckets, not history."""
-        df = self._read_committed("buckets")
+    def buckets(self, rows: T.StructType) -> DataFrame | None:
+        """Committed LIVE bucket rows, ``rows`` being the schema of the
+        packed rows the store holds (bucket_pt included, which the
+        caller prunes on before any join). Dirs below ``bucket_base``
+        were folded by ``compact_buckets`` and are invisible; rows of
+        tombstoned (over-cap) buckets are dropped at compaction, so
+        probe bytes track live buckets, not history."""
+        schema = T.StructType(rows.fields).add("batch_id", T.IntegerType())
+        df = self._read_committed("buckets", schema)
         if df is None:
             return None
         df = df.where(F.col("batch_id") >= self._meta["bucket_base"])
-        return df.select(*BUCKET_COLS, "bucket_pt")
+        return df.select(*rows.fieldNames())
 
     def dead_buckets(self) -> DataFrame | None:
         """Committed tombstones: bucket keys whose STORED occupancy has
@@ -276,7 +325,7 @@ class DedupStore:
             return None
         return df.where(
             F.col("batch_id") >= self._meta["bucket_base"]
-        ).select("space", "bucket_idx", "bucket_key")
+        ).select("bucket")
 
     def state_rows_for(self, ids: DataFrame) -> DataFrame | None:
         """Committed state rows for the given ids(file_id) — pruned
@@ -285,15 +334,8 @@ class DedupStore:
         df = self._read_committed("state")
         if df is None:
             return None
-        pts = [
-            r[0]
-            for r in ids.select(_id_pt().alias("pt")).distinct().collect()
-        ]
-        return (
-            df.where(F.col("id_pt").isin(pts))
-            .join(F.broadcast(ids.select("file_id")), "file_id", "left_semi")
-            .select(*STATE_COLS)
-        )
+        keys = ids.withColumn("id_pt", _id_pt())
+        return _pruned_semi(df, keys, "file_id", "id_pt").select(*STATE_COLS)
 
     def edges(self) -> DataFrame | None:
         return self._read_committed("edges")
@@ -322,7 +364,7 @@ class DedupStore:
                 best = max(best, int(m.group(1)))
         if best < 0:
             return None
-        return self.spark.read.parquet(
+        return self.spark.read.schema(REMAP_SCHEMA).parquet(
             self._path(f"remap/batch_id={best}")
         )
 
@@ -359,14 +401,8 @@ class DedupStore:
         stored = self._stored_clusters()
         if stored is None:
             return None
-        pts = [
-            r[0]
-            for r in ids.select(_id_pt().alias("pt")).distinct().collect()
-        ]
-        hit = (
-            stored.where(F.col("id_pt").isin(pts))
-            .join(F.broadcast(ids.select("file_id")), "file_id", "left_semi")
-        )
+        keys = ids.withColumn("id_pt", _id_pt())
+        hit = _pruned_semi(stored, keys, "file_id", "id_pt")
         return self._resolve(hit, self.remap_table())
 
     # ---- writes --------------------------------------------------------
@@ -428,28 +464,18 @@ class DedupStore:
         forever while being permanently ineligible for candidates —
         dead bytes re-read every batch. Amortized O(live state / period);
         replay-safe because bucket_base only advances at mark_batch."""
-        keys = ["space", "bucket_idx", "bucket_key"]
-        stored = self.buckets()
-        allrows = (
-            bk_new
-            if stored is None
-            else stored.select(*BUCKET_COLS).unionByName(
-                bk_new.select(*BUCKET_COLS)
-            )
-        )
+        stored = self.buckets(bk_new.schema)
+        allrows = bk_new if stored is None else stored.unionByName(bk_new)
         old_dead = self.dead_buckets()
-        counts = allrows.groupBy(*keys).count()
-        new_dead = counts.where(F.col("count") > cap).select(*keys)
+        counts = allrows.groupBy("bucket").count()
+        new_dead = counts.where(F.col("count") > cap).select("bucket")
         dead = (
             new_dead
             if old_dead is None
             else old_dead.unionByName(new_dead).distinct()
         ).localCheckpoint()
-        live = allrows.join(dead, keys, "left_anti")
-        self.write_batch(
-            "buckets", live.withColumn("bucket_pt", _bucket_pt()),
-            batch_id, "bucket_pt",
-        )
+        live = allrows.join(dead, "bucket", "left_anti")
+        self.write_batch("buckets", live, batch_id, "bucket_pt")
         # tombstones: one row per dead key — small by construction (hot
         # buckets are rare); a handful of files keeps listing trivial
         self.write_batch("dead", dead.repartition(2), batch_id)
@@ -473,66 +499,72 @@ class DedupStore:
                         shutil.rmtree(os.path.join(p, d), ignore_errors=True)
 
 
-def _incremental_candidates(
-    bk_new: DataFrame, store: DedupStore, cfg: DedupConfig
-) -> DataFrame:
-    """Candidate pairs touching ≥1 new file, against the stored unified
-    bucket table. The stored side is scanned pruned (bucket_pt +
-    committed batch_id PartitionFilters) and broadcast-semi-joined on the
-    new batch's bucket keys — never shuffled, never recomputed. Frequency
-    caps use the COMBINED occupancy of each touched bucket (stored
-    matches + new members) in BOTH spaces; the SimHash Hamming post-
-    filter applies to chunk-space pairs exactly as in batch
-    (operators/buckets.unified_candidates)."""
-    keys = ["space", "bucket_idx", "bucket_key"]
-    stored = store.buckets()
-    if stored is not None:
-        pts = [
-            r[0]
-            for r in bk_new.select(_bucket_pt().alias("pt")).distinct().collect()
-        ]
-        matched = (
-            stored.where(F.col("bucket_pt").isin(pts))
-            .join(F.broadcast(bk_new.select(*keys).distinct()), keys, "left_semi")
-            .select(*BUCKET_COLS)
-        )
-        combined = matched.unionByName(bk_new.select(*BUCKET_COLS))
-    else:
-        combined = bk_new.select(*BUCKET_COLS)
+def _collapse_copies(
+    ingested: DataFrame, store: DedupStore
+) -> tuple[DataFrame, DataFrame]:
+    """→ (reps, copy_edges(a, b)): one representative per content the
+    store has not seen, and an edge from each copy to its representative
+    — the batch's min file_id of its content, or the stored file of
+    that content. Copies get no state row and no bucket row."""
+    state = store.state()
+    if state is None:
+        return collapse_exact_dups(ingested)
+    # a scan of two state columns, semi-joined on the batch's broadcast
+    # hashes: at most one row per hash, as stored copies have no row
+    stored = (
+        state.select("file_id", "sha256")
+        .join(F.broadcast(ingested.select("sha256")), "sha256", "left_semi")
+        .localCheckpoint()
+    )
+    reps, copy_edges = collapse_exact_dups(
+        ingested.join(F.broadcast(stored), "sha256", "left_anti")
+    )
+    to_stored = ingested.join(
+        F.broadcast(stored.withColumnRenamed("file_id", "a")), "sha256"
+    ).select("a", F.col("file_id").alias("b"))
+    return reps, copy_edges.unionByName(to_stored)
 
-    sizes = combined.groupBy(*keys).count()
-    keep = sizes.where(
-        (F.col("count") > 1) & (F.col("count") <= cfg.max_band_bucket)
-    ).select(*keys)
+
+def _probe_rows(bk_new: DataFrame, store: DedupStore) -> DataFrame:
+    """The bucket rows a batch's candidates come from: the stored rows
+    of the buckets the new rows ``bk_new`` touch (pruned bucket_pt scan
+    + broadcast semi-join on the batch's keys) ∪ the new rows, with
+    tombstoned buckets dropped."""
+    rows = bk_new
+    stored = store.buckets(bk_new.schema)
+    if stored is not None:
+        rows = _pruned_semi(stored, bk_new, "bucket", "bucket_pt").unionByName(
+            bk_new
+        )
     dead = store.dead_buckets()
     if dead is not None:
-        # tombstoned keys crossed the cap before their member rows were
-        # compacted away; the live count alone could fall back under the
-        # cap and wrongly re-admit them — the anti-join preserves the
-        # exact over-cap-forever semantics of the uncompacted store
-        keep = keep.join(dead, keys, "left_anti")
-    left = bk_new.join(keep, keys, "left_semi").select(
-        *keys, F.col("file_id").alias("x"), F.col("simhash").alias("sim_x")
+        # tombstoned buckets crossed the cap before their member rows
+        # were compacted away; the live count alone could fall back
+        # under the cap and wrongly re-admit them
+        rows = rows.join(F.broadcast(dead), "bucket", "left_anti")
+    return rows.drop("bucket_pt")
+
+
+def _candidates(
+    bk_new: DataFrame, new_ids: DataFrame, store: DedupStore,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """Candidate pairs with ≥ 1 endpoint in ``new_ids(file_id)``, the
+    files of the new bucket rows ``bk_new``: the batch pipeline's
+    cap_buckets + bucket_pairs over new ⋈ (stored ∪ new) (_probe_rows)."""
+    pairs = bucket_pairs(cap_buckets(_probe_rows(bk_new, store), cfg), cfg)
+
+    def is_new(side: str) -> DataFrame:
+        return F.broadcast(new_ids.select(
+            F.col("file_id").alias(side), F.lit(True).alias(f"new_{side}")
+        ))
+
+    return (
+        pairs.join(is_new("a"), "a", "left")
+        .join(is_new("b"), "b", "left")
+        .where(F.col("new_a") | F.col("new_b"))
+        .select("a", "b", "src")
     )
-    right = combined.join(keep, keys, "left_semi").select(
-        *keys, F.col("file_id").alias("y"), F.col("simhash").alias("sim_y")
-    )
-    hamming_ok = (F.col("space") == 0) | (
-        F.bit_count(F.col("sim_x").bitwiseXOR(F.col("sim_y")))
-        <= cfg.hamming_threshold
-    )
-    src_col = F.when(F.col("space") == 0, "lsh").otherwise("simhash")
-    pairs = (
-        left.join(right, keys)
-        .where(F.col("x") != F.col("y"))
-        .where(hamming_ok)
-        .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            src_col.alias("src"),
-        )
-    )
-    return pairs.groupBy("a", "b").agg(F.min("src").alias("src"))
 
 
 def _cluster_fold(
@@ -622,25 +654,31 @@ def process_batch(
     cfg: DedupConfig,
     batch_id: int = 0,
 ) -> None:
-    """One micro-batch: signatures → incremental candidates → verify →
-    cluster fold → commit. Idempotent per batch_id (commit-record
-    short-circuit; all writes overwrite their own batch dir)."""
+    """One micro-batch: exact-copy collapse → signatures → candidates →
+    verify → cluster fold → commit. Idempotent per batch_id
+    (commit-record short-circuit; all writes overwrite their own batch
+    dir)."""
     if store.batch_done(batch_id):
         return
     ingested_new = ingest_files(batch_files, cfg).localCheckpoint()
     if ingested_new.isEmpty():
         store.mark_batch(batch_id)
         return
-    sigs_new = compute_signatures(ingested_new, cfg)
+    reps, copy_edges = _collapse_copies(ingested_new, store)
+    sigs_new = compute_signatures(reps, cfg).localCheckpoint()
     new_state = (
-        ingested_new.select("file_id", "sha256", "size", "content_norm")
-        .join(sigs_new.select("file_id", "minhash", "mh16", "simhash"), "file_id")
+        sigs_new.select("file_id", "sha256", "size", "mh16")
+        .join(ingested_new.select("file_id", "content_norm"), "file_id")
         .select(*STATE_COLS)
         .localCheckpoint()
     )
 
-    bk_new = bucket_table(new_state, cfg).localCheckpoint()
-    cand = _incremental_candidates(bk_new, store, cfg)
+    bk_new = (
+        packed_bucket_table(sigs_new, cfg)
+        .withColumn("bucket_pt", _bucket_pt())
+        .localCheckpoint()
+    )
+    cand = _candidates(bk_new, sigs_new.select("file_id"), store, cfg)
 
     # verification lookups: candidate endpoints only — old rows fetched
     # via pruned scan + broadcast semi-join, new rows from memory
@@ -656,8 +694,6 @@ def process_batch(
         if fetched_old is None
         else fetched_old.unionByName(new_state)
     )
-    # the estimate kernel applies the batch path's MinHash prefix gate
-    # (these pairs skip the bucket join, where batch pairs first meet it)
     cand = estimate_filter_candidates(cand, lookup, cfg)
     pairs = verify_pairs(cand, lookup, cfg)
     edges_new = (
@@ -667,8 +703,8 @@ def process_batch(
     )
 
     arrivals, composed = _cluster_fold(
-        spark, store, edges_new.select("a", "b"),
-        new_state.select("file_id"),
+        spark, store, edges_new.select("a", "b").unionByName(copy_edges),
+        ingested_new.select("file_id"),
     )
 
     store.write_batch(
@@ -681,12 +717,7 @@ def process_batch(
         # tombstones (probe bytes track live buckets, not history)
         store.compact_buckets(batch_id, bk_new, cfg.max_band_bucket)
     else:
-        store.write_batch(
-            "buckets",
-            bk_new.withColumn("bucket_pt", _bucket_pt()),
-            batch_id,
-            "bucket_pt",
-        )
+        store.write_batch("buckets", bk_new, batch_id, "bucket_pt")
     # few-MB relation: cap its file count so the edge store's listing
     # cost stays trivial across thousands of batches
     store.write_batch("edges", edges_new.repartition(2), batch_id)
