@@ -217,25 +217,36 @@ def test_compaction_folds_remap_and_gcs(spark, corpus, batch_clusters, tmp_path_
 def test_incremental_candidates_plan_is_pruned_and_broadcast(
     spark, corpus, tmp_path_factory
 ):
-    """Scale contract of the streaming probe: the stored bucket rows are
-    read with directory-partition pruning (PartitionFilters on bucket_pt)
+    """Scale contract of the streaming probe: the stored bucket rows, and
+    the stored hashes the copy check reads, are read with
+    directory-partition pruning (PartitionFilters on bucket_pt, sha_pt)
     and joined via broadcast — the accumulated side must never be
     shuffled whole, so per-batch cost tracks the batch, not the store."""
     from twinspect_spark.ingest import ingest_files
     from twinspect_spark.operators.buckets import packed_bucket_table
     from twinspect_spark.signatures import compute_signatures
-    from twinspect_spark.streaming.incremental import _bucket_pt, _probe_rows
+    from twinspect_spark.streaming.incremental import (
+        BUCKET_PARTS,
+        _probe_rows,
+        _pt,
+    )
 
     store = DedupStore(spark, str(tmp_path_factory.mktemp("store_plan")))
     chunks = _chunks(corpus)
     process_batch(spark, spark.createDataFrame(chunks[0]), store, CFG, batch_id=0)
     ing = ingest_files(spark.createDataFrame(chunks[1]), CFG)
     sigs = compute_signatures(ing, CFG)
-    bk_new = packed_bucket_table(sigs, CFG).withColumn("bucket_pt", _bucket_pt())
-    plan = _probe_rows(bk_new, store)._jdf.queryExecution().toString()
-    scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert any("bucket_pt" in ln for ln in scan_lines), scan_lines
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+    bk_new = packed_bucket_table(sigs, CFG).withColumn(
+        "bucket_pt", _pt("bucket", BUCKET_PARTS)
+    )
+    for df, pt in (
+        (_probe_rows(bk_new, store), "bucket_pt"),
+        (store.hash_rows_for(ing.select("sha256")), "sha_pt"),
+    ):
+        plan = df._jdf.queryExecution().toString()
+        scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+        assert any(pt in ln for ln in scan_lines), scan_lines
+        assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
 
 
 def _stream_clusters(spark, batches, cfg, root):

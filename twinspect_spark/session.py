@@ -20,6 +20,8 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+from twinspect_spark.streaming.incremental import BUCKET_PARTS, ID_PARTS
+
 
 def package_zip() -> str:
     """Zip this package for executor shipment (the `spark-submit
@@ -138,14 +140,16 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # A parquet read lists a directory's subdirectories in a Spark
         # job once there are more than this many (default 32). Each
-        # batch dir of the streaming stores holds 64 partition dirs
-        # (streaming/incremental.py), so every store read launched one
-        # listing job per committed batch: jobs per process_batch rose
-        # by 3 a batch (43, 75, 78, ..., 87 over six 358-file batches on
-        # 4 vCPUs). Driver-side listing of a few thousand dirs is cheaper
-        # than a job; the store layout keeps its 64-way pruning.
+        # batch dir of the streaming stores holds ID_PARTS or
+        # BUCKET_PARTS partition dirs (64), so at the default every
+        # store read launched one listing job per committed batch: jobs
+        # per process_batch rose by 3 a batch (43, 75, 78, ..., 87 over
+        # six 358-file batches on 4 vCPUs). At their max, a batch dir's
+        # partition dirs are listed on the driver, and a store with more
+        # batch dirs than that is listed in ONE job: jobs per batch stay
+        # constant either way.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                "4096")
+                str(max(ID_PARTS, BUCKET_PARTS)))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -12,6 +12,8 @@ man's Iceberg bucketing — the Iceberg migration only swaps the writer):
   state/batch_id=<id>/id_pt=<p>/      one row (STATE_COLS) per distinct
                                       content: exact copies get none,
                                       p = pmod(xxhash64(file_id), ID_PARTS)
+  hashes/batch_id=<id>/sha_pt=<p>/    (sha256, file_id) of each state row,
+                                      p = pmod(xxhash64(sha256), ID_PARTS)
   buckets/batch_id=<id>/bucket_pt=<p>/ the batch pipeline's packed bucket
                                       rows (operators/buckets.
                                       packed_bucket_table: file_id,
@@ -47,9 +49,9 @@ Why this scales where a naive design is O(|state|) per batch:
    bucket_pt + batch_id) and BROADCAST-semi-joins the new batch's bucket
    keys against it: the accumulated side is scanned (pruned), never
    shuffled whole. Exact copies are collapsed before signatures, within
-   the batch and against the stored ``sha256`` (a column-pruned scan,
-   broadcast-semi-joined on the batch's hashes), so a copied file adds
-   no bucket row and cannot push a bucket past the cap.
+   the batch and against the stored hashes (pruned sha_pt scan of the
+   hashes store + broadcast semi-join on the batch's hashes), so a
+   copied file adds no bucket row and cannot push a bucket past the cap.
 3. The candidate generator IS the batch one: the touched buckets'
    stored rows ∪ the new rows go through operators/buckets.cap_buckets
    (count over the COMBINED occupancy, cap) and bucket_pairs (all-pairs
@@ -64,6 +66,11 @@ Why this scales where a naive design is O(|state|) per batch:
    simhash.)
 4. Signature/content lookups for verification fetch only the candidate
    endpoints: pruned scan on id_pt + broadcast semi-join on file_id.
+   (The pruning is by directory: a batch of a few hundred files
+   touches most of the 64 partitions, and each holds one file per
+   committed batch, so these lookups, like the copy check's, still
+   list and open O(batches) files: state and hashes are never
+   compacted.)
 5. Cluster assignments are append-only: each file's arrival row is
    written once and never touched again. Merges write ONLY a composed
    (old_label → new_label) remap — O(total merges) rows, reset by
@@ -100,8 +107,10 @@ Micro-batches are assumed broadcast-sized (thousands of files); bulk
 backfills belong to the batch pipeline.
 
 Every read names its store's schema, so a read infers none (schema
-inference is one Spark job per read); partition discovery lists the
-batch directories on the driver (session.get_spark).
+inference is one Spark job per read). Partition discovery lists a
+store's batch directories on the driver up to max(ID_PARTS,
+BUCKET_PARTS) of them and in one Spark job above that
+(session.get_spark), never in one job per batch directory.
 """
 
 from __future__ import annotations
@@ -130,13 +139,14 @@ from twinspect_spark.operators.verify import (
 )
 from twinspect_spark.signatures import compute_signatures
 
-STATE_COLS = ["file_id", "sha256", "size", "content_norm", "mh16"]
+STATE_COLS = ["file_id", "size", "content_norm", "mh16"]
 REMAP_SCHEMA = "old_label long, new_label long"
 # stored schemas, partition columns included; the bucket store's rows
 # are packed_bucket_table's, whose prefix-word count follows the config
 _SCHEMAS = {
-    "state": "file_id long, sha256 string, size long, content_norm string, "
+    "state": "file_id long, size long, content_norm string, "
     "mh16 array<smallint>, batch_id int, id_pt int",
+    "hashes": "sha256 string, file_id long, batch_id int, sha_pt int",
     "clusters": "file_id long, cluster_id long, batch_id int, id_pt int",
     "edges": "a long, b long, jaccard double, method string, batch_id int",
     "dead": "bucket long, batch_id int",
@@ -155,12 +165,9 @@ _MARKER_RE = re.compile(r"_batch_(\d+)\.done$")  # v1 layout, detect-only
 _BATCH_DIR_RE = re.compile(r"batch_id=(\d+)$")
 
 
-def _id_pt() -> F.Column:
-    return F.pmod(F.xxhash64("file_id"), F.lit(ID_PARTS)).cast("int")
-
-
-def _bucket_pt() -> F.Column:
-    return F.pmod(F.xxhash64("bucket"), F.lit(BUCKET_PARTS)).cast("int")
+def _pt(col: str, parts: int = ID_PARTS) -> F.Column:
+    """The directory partition of ``col``: pmod(xxhash64(col), parts)."""
+    return F.pmod(F.xxhash64(col), F.lit(parts)).cast("int")
 
 
 def _pruned_semi(
@@ -236,12 +243,6 @@ class DedupStore:
         if self._meta["exceptions"]:
             pred = pred | F.col("batch_id").isin(self._meta["exceptions"])
         return pred
-
-    def committed_ids(self) -> list[int]:
-        return sorted(
-            set(range(self._meta["high_water"] + 1))
-            | set(self._meta["exceptions"])
-        )
 
     def batch_done(self, batch_id: int) -> bool:
         return (
@@ -334,8 +335,21 @@ class DedupStore:
         df = self._read_committed("state")
         if df is None:
             return None
-        keys = ids.withColumn("id_pt", _id_pt())
+        keys = ids.withColumn("id_pt", _pt("file_id"))
         return _pruned_semi(df, keys, "file_id", "id_pt").select(*STATE_COLS)
+
+    def hash_rows_for(self, hashes: DataFrame) -> DataFrame | None:
+        """Committed (file_id, sha256) rows of the given hashes(sha256) —
+        pruned sha_pt scan + broadcast semi-join, so the copy check's
+        cost tracks the batch, not the store. At most one row per hash:
+        only a content's first file is stored."""
+        df = self._read_committed("hashes")
+        if df is None:
+            return None
+        keys = hashes.withColumn("sha_pt", _pt("sha256"))
+        return _pruned_semi(df, keys, "sha256", "sha_pt").select(
+            "file_id", "sha256"
+        )
 
     def edges(self) -> DataFrame | None:
         return self._read_committed("edges")
@@ -401,7 +415,7 @@ class DedupStore:
         stored = self._stored_clusters()
         if stored is None:
             return None
-        keys = ids.withColumn("id_pt", _id_pt())
+        keys = ids.withColumn("id_pt", _pt("file_id"))
         hit = _pruned_semi(stored, keys, "file_id", "id_pt")
         return self._resolve(hit, self.remap_table())
 
@@ -442,9 +456,8 @@ class DedupStore:
         stored = self._stored_clusters()
         full = self._resolve(stored, rm) if stored is not None else None
         full = extra if full is None else full.unionByName(extra)
-        self.write_batch(
-            "clusters", full.withColumn("id_pt", _id_pt()), batch_id, "id_pt"
-        )
+        full = full.withColumn("id_pt", _pt("file_id"))
+        self.write_batch("clusters", full, batch_id, "id_pt")
         self.write_batch(
             "remap",
             self.spark.createDataFrame([], REMAP_SCHEMA).repartition(1),
@@ -505,17 +518,11 @@ def _collapse_copies(
     """→ (reps, copy_edges(a, b)): one representative per content the
     store has not seen, and an edge from each copy to its representative
     — the batch's min file_id of its content, or the stored file of
-    that content. Copies get no state row and no bucket row."""
-    state = store.state()
-    if state is None:
+    that content. Copies get no state, hash or bucket row."""
+    stored = store.hash_rows_for(ingested.select("sha256"))
+    if stored is None:
         return collapse_exact_dups(ingested)
-    # a scan of two state columns, semi-joined on the batch's broadcast
-    # hashes: at most one row per hash, as stored copies have no row
-    stored = (
-        state.select("file_id", "sha256")
-        .join(F.broadcast(ingested.select("sha256")), "sha256", "left_semi")
-        .localCheckpoint()
-    )
+    stored = stored.localCheckpoint()
     reps, copy_edges = collapse_exact_dups(
         ingested.join(F.broadcast(stored), "sha256", "left_anti")
     )
@@ -667,7 +674,7 @@ def process_batch(
     reps, copy_edges = _collapse_copies(ingested_new, store)
     sigs_new = compute_signatures(reps, cfg).localCheckpoint()
     new_state = (
-        sigs_new.select("file_id", "sha256", "size", "mh16")
+        sigs_new.select("file_id", "size", "mh16")
         .join(ingested_new.select("file_id", "content_norm"), "file_id")
         .select(*STATE_COLS)
         .localCheckpoint()
@@ -675,7 +682,7 @@ def process_batch(
 
     bk_new = (
         packed_bucket_table(sigs_new, cfg)
-        .withColumn("bucket_pt", _bucket_pt())
+        .withColumn("bucket_pt", _pt("bucket", BUCKET_PARTS))
         .localCheckpoint()
     )
     cand = _candidates(bk_new, sigs_new.select("file_id"), store, cfg)
@@ -707,8 +714,11 @@ def process_batch(
         ingested_new.select("file_id"),
     )
 
+    state_rows = new_state.withColumn("id_pt", _pt("file_id"))
+    store.write_batch("state", state_rows, batch_id, "id_pt")
+    hashes = sigs_new.select("sha256", "file_id")
     store.write_batch(
-        "state", new_state.withColumn("id_pt", _id_pt()), batch_id, "id_pt"
+        "hashes", hashes.withColumn("sha_pt", _pt("sha256")), batch_id, "sha_pt"
     )
     every = store.compact_buckets_every
     if every and batch_id % every == every - 1:
@@ -729,7 +739,7 @@ def process_batch(
     else:
         store.write_batch(
             "clusters",
-            arrivals.withColumn("id_pt", _id_pt()),
+            arrivals.withColumn("id_pt", _pt("file_id")),
             batch_id,
             "id_pt",
         )
